@@ -6,8 +6,11 @@ they live here once instead of drifting apart per module:
 
 - ``TOKENS`` / ``TOKENS_DUCK``: ascii word tokens of ``text`` --
   lowercase split on non-alphanumeric runs, empties dropped.
-- ``shingles(k)`` / ``shingles_duck(k)``: word k-grams of those tokens
-  (space-joined), the dedup/similarity unit.
+- ``shingles(k, toks)`` / ``shingles_duck(k)``: word k-grams of those
+  tokens (space-joined), the dedup/similarity unit.  The Spark form
+  takes the NAME of an already-bound token column: the expression
+  references ``toks`` once per k-gram inside its lambda, so passing
+  ``TOKENS`` itself would re-split the text once per k-gram.
 - ``h64(col)`` / ``h64_duck(col)``: the md5-derived 60-bit integer
   hash -- the only hash both engines compute bit-identically; Column
   form for Spark operators, SQL-string form for the DuckDB oracles.
@@ -32,8 +35,9 @@ TOKENS_DUCK = (
 )
 
 
-def shingles(k: int = 3, toks: str = TOKENS) -> str:
-    """Spark SQL expr: word k-gram strings of the token array."""
+def shingles(k: int, toks: str) -> str:
+    """Spark SQL expr: word k-gram strings of the token array column
+    ``toks`` (bind ``TOKENS`` to a column first)."""
     return (
         f"CASE WHEN size({toks}) >= {k} THEN "
         f"transform(sequence(1, size({toks}) - {k - 1}), "

@@ -243,53 +243,43 @@ def minhash_candidate_pairs(
     when the caller already knows the corpus size (the pipeline job
     counts survivors for its summary anyway -- no extra pass), else
     one ``docs.count()`` derives it (a parquet-footer metadata count
-    on plain scans).  An explicit ``banding`` tuple overrides both."""
+    on plain scans).  An explicit ``banding`` tuple overrides both.
+
+    Plan shape: the Arrow signature pass has exactly ONE consumer, so
+    it runs once at every scale.  The flood-safe ``bucket_n`` window
+    drops buckets over ``bucket_cap`` before anything is collected;
+    the ``band_key`` groupBy then reuses the window's exchange and
+    collects each surviving bucket's sorted doc_ids (at most
+    ``bucket_cap``), and the in-bucket pairs are generated inside the
+    row.  Same pairs as the capped band self-join of the oracle CTEs,
+    whose two aliases would each re-run the signature pass."""
     from pyspark.sql import Window
 
     if banding is None:
         if n_docs is None:
             n_docs = docs.count()
         banding = minhash_banding(n_docs)
-    stacked = minhash_bands_df(docs, banding)
-    # bucket size via a window on band_key: ONE shuffle of the band
-    # rows.  Above the barrier_pays crossover the capped frame is
-    # materialized once per invocation (eager localCheckpoint): both
-    # aliases of the self-join consume it, and without the barrier
-    # EACH side re-runs the Arrow signature pass over the whole
-    # corpus (2 corpus passes + 2 band shuffles -> 1, guide §8: the
-    # band table is the lightweight proxy — (doc_id, band_key) rows,
-    # b per doc — never the corpus text).  localCheckpoint, not
-    # persist: the CacheManager matches persisted plans across
-    # invocations, which would turn a re-run into a silent cache
-    # read.
     bucket_n = F.count("*").over(Window.partitionBy("band_key"))
-    capped = (
-        stacked.withColumn("bucket_n", bucket_n)
+    buckets = (
+        minhash_bands_df(docs, banding)
+        .withColumn("bucket_n", bucket_n)
         .filter(F.col("bucket_n") <= bucket_cap)
-        .select("doc_id", "band_key")
+        .groupBy("band_key")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        # a lone id pairs with nothing, and sequence(0, -1) below
+        # would count down instead of coming out empty
+        .filter(F.size("ids") >= 2)
     )
-    from .scanspread import barrier_pays
-
-    if barrier_pays(n_docs if n_docs is not None else 0):
-        # the re-spread after the checkpoint restores full
-        # parallelism for the in-bucket pair join (the checkpointed
-        # frame keeps the window's AQE-coalesced ~1-partition
-        # layout) at the cost of one tiny proxy shuffle, which the
-        # band-keyed join then reuses.  Below the barrier_pays
-        # crossover the un-materialized self-join (two cheap
-        # pipelined passes) is faster — measured both ways.
-        capped = capped.localCheckpoint().repartition(
-            docs.sparkSession.sparkContext.defaultParallelism,
-            "band_key",
-        )
-    a = capped.alias("a")
-    b = capped.alias("b")
+    in_bucket = F.expr(
+        "flatten(transform(sequence(0, size(ids) - 2), i -> "
+        "transform(sequence(i + 1, size(ids) - 1), j -> "
+        "named_struct('doc_a', ids[i], 'doc_b', ids[j]))))"
+    )
     return (
-        a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
+        buckets.select(F.explode(in_bucket).alias("p"))
+        .select("p.doc_a", "p.doc_b")
+        # equal ids only come from repeated doc_id rows
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
 
@@ -734,19 +724,22 @@ def dedup_simhash_pairs(
         ).alias("chunk_key"),
     )
     bucket_n = F.count("*").over(Window.partitionBy("chunk_key"))
-    # materialized once per invocation (eager localCheckpoint): the
-    # self-join would otherwise run the Arrow signature pass + chunk
-    # window TWICE, once per alias (the minhash_candidate_pairs
-    # rationale; (doc_id, simhash, chunk_key) is the lightweight
-    # proxy, 4 rows per doc)
+    # materialized once per invocation (eager localCheckpoint) above
+    # the barrier_pays crossover: the self-join would otherwise run
+    # the Arrow signature pass + chunk window TWICE, once per alias
+    # ((doc_id, simhash, chunk_key) is the lightweight proxy, 4 rows
+    # per doc).  localCheckpoint, not persist: the CacheManager
+    # matches persisted plans across invocations.
     capped = (
         chunks.withColumn("bucket_n", bucket_n)
         .filter(F.col("bucket_n") <= bucket_cap)
         .select("doc_id", "simhash", "chunk_key")
     )
     if barrier_pays(n_docs):
-        # materialize + re-spread (the minhash_candidate_pairs
-        # rationale and the same measured crossover)
+        # the re-spread restores full parallelism for the in-bucket
+        # pair join (the checkpointed frame keeps the window's
+        # AQE-coalesced ~1-partition layout) at the cost of one tiny
+        # proxy shuffle, which the chunk-keyed join then reuses
         capped = capped.localCheckpoint().repartition(
             spark.sparkContext.defaultParallelism, "chunk_key"
         )
@@ -930,7 +923,7 @@ def dedup_minhash_verified(
     corpus-sized (guide §3.2: reduce the big side before the join;
     non-candidates could never survive the inner verify joins).  The
     candidate-sized sets frame is materialized once for its two
-    aliases (the minhash_candidate_pairs rationale).  Previously this
+    aliases (each alias of a self-join re-runs its plan).  Previously this
     operator ran the corpus through Python FOUR times (2 sig + 2
     set-build passes); now twice (1 sig + 1 pruned set-build)."""
     from .scanspread import barrier_pays
@@ -1721,16 +1714,13 @@ def resolve_components(
     large-star/small-star, O(log^2 n) rounds independent of diameter --
     instead of raising, so pathological chains cost extra rounds,
     never a wrong answer."""
-    edges = (
-        pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        .unionAll(
-            pairs.select(
-                F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
-            )
-        )
+    # both orientations from ONE pass over pairs (a union of two
+    # selects would run the whole pairs plan once per branch)
+    both = F.array(
+        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
     )
+    edges = pairs.select(F.explode(both).alias("e")).select("e.src", "e.dst")
     edges = _ckpt(edges, checkpoint_dir)
     labels = _ckpt(
         edges.select(F.col("src").alias("doc_id"))
@@ -1738,60 +1728,27 @@ def resolve_components(
         .withColumn("cluster_id", F.col("doc_id")),
         checkpoint_dir,
     )
-    # convergence via the MONOTONE label-sum invariant when labels are
-    # NUMERIC: min-label propagation only ever DECREASES labels, so
-    # sum(cluster_id) is strictly decreasing until the fixed point and
-    # "sum unchanged" is EXACTLY "no label changed" -- one cheap
-    # decimal-exact scan of the just-checkpointed labels per round
-    # instead of an edge-sized new-vs-old join (r5; decimal(38,0) so a
-    # 10^12-node sum cannot overflow or silently wrap).  STRING labels
-    # (the pipeline's doc-XXXX ids) are also monotone (lexicographic
-    # min) but have no summable surrogate, so they keep the exact
-    # join-based changed count.
-    numeric_labels = dict(labels.dtypes)["cluster_id"] in (
-        "tinyint", "smallint", "int", "bigint",
-    )
-
-    def label_sum(lbl):
-        return lbl.agg(
-            F.sum(F.col("cluster_id").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    def join_changed(new, old):
-        return (
-            new.alias("n")
-            .join(old.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-
-    prev_sum = label_sum(labels) if numeric_labels else None
-    changed = -1  # set each round; -1 only if max_iters < 1
+    # convergence: the new label is least(old, nbr_min), so a label
+    # changed EXACTLY when nbr_min < old -- carried as ``moved`` through
+    # the round's checkpoint and counted on the materialized frame (one
+    # scan, no new-vs-old join, any label type)
+    moved = F.coalesce(F.col("nbr_min") < F.col("cluster_id"), F.lit(False))
     for _ in range(max_iters):
         nbr = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy("dst")
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(nbr, labels.doc_id == nbr.dst, "left")
-            .select(
+        new_labels = _ckpt(
+            labels.join(nbr, labels.doc_id == nbr.dst, "left").select(
                 "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
+                F.least("cluster_id", "nbr_min").alias("cluster_id"),
+                moved.alias("moved"),
+            ),
+            checkpoint_dir,
         )
-        new_labels = _ckpt(new_labels, checkpoint_dir)
-        if numeric_labels:
-            new_sum = label_sum(new_labels)
-            changed = 0 if new_sum == prev_sum else 1
-            prev_sum = new_sum
-        else:
-            changed = join_changed(new_labels, labels)
-        labels = new_labels
-        if changed == 0:
+        labels = new_labels.select("doc_id", "cluster_id")
+        if new_labels.filter("moved").count() == 0:
             break
     else:
         # diameter > max_iters: switch to the diameter-independent

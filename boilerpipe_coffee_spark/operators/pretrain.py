@@ -47,20 +47,27 @@ def content_features(
         )
         .filter(F.length("text") > 0)
     )
-    grams = F.expr(shingles(2, TOKENS))
+    # tokens and bigrams bound to columns ONCE: shingles() inlines its
+    # token expression per use, and inside the transform lambda that
+    # is one regex split per bigram (CSE does not reach into lambdas)
+    grams = F.col("grams")
     dup_bigram = F.round(
         (F.size(grams) - F.size(F.array_distinct(grams)))
         / F.greatest(F.size(grams), F.lit(1)),
         4,
     )
-    featured = content.select(
-        "doc_id",
-        "title",
-        "text",
-        "n_media",
-        F.size(F.expr(TOKENS)).alias("n_tokens"),
-        dup_bigram.alias("dup_bigram_frac"),
-        F.md5("text").alias("content_hash"),
+    featured = (
+        content.withColumn("toks", F.expr(TOKENS))
+        .withColumn("grams", F.expr(shingles(2, "toks")))
+        .select(
+            "doc_id",
+            "title",
+            "text",
+            "n_media",
+            F.size("toks").alias("n_tokens"),
+            dup_bigram.alias("dup_bigram_frac"),
+            F.md5("text").alias("content_hash"),
+        )
     )
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     gates = (F.col("n_tokens") >= min_tokens) & (

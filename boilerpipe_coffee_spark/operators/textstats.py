@@ -703,9 +703,11 @@ def contamination_check(spark, sf_dir):
     from ..functions import shingles
 
     docs = _t(spark, sf_dir, "documents")
-    sh = F.array_distinct(F.expr(shingles(CONTAM_K)))
-    base = docs.select("doc_id", sh.alias("sh")).select(
-        "doc_id", "sh", F.size("sh").alias("n_shingles")
+    sh = F.array_distinct(F.expr(shingles(CONTAM_K, "toks")))
+    base = (
+        docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
+        .select("doc_id", sh.alias("sh"))
+        .select("doc_id", "sh", F.size("sh").alias("n_shingles"))
     )
     evals = (
         base.filter(F.col("doc_id") < N_EVAL_DOCS)

@@ -286,6 +286,88 @@ def test_minhash_nonlegacy_policy_point_parity(spark, tmp_path):
     assert near_hits >= 8, f"near-dup recall collapsed: {near_hits}/10"
 
 
+def _reference_candidate_pairs(rows, bucket_cap, n_docs):
+    """Pure-Python MinHash-LSH candidate pairs: the same tokenizer,
+    3-shingle set, md5 60-bit hash, affine family, band keys and
+    per-row bucket cap as minhash_candidate_pairs, then every
+    doc_a < doc_b pair inside each surviving bucket."""
+    import hashlib
+    import re
+    from collections import defaultdict
+
+    from boilerpipe_coffee_spark.operators.dedup import (
+        _MINHASH_AB,
+        _P,
+        minhash_banding,
+    )
+
+    b, r = minhash_banding(n_docs)
+    buckets = defaultdict(list)
+    for doc_id, text in rows:
+        toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+        shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        if not shingles:
+            continue
+        hs = [int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % _P for s in shingles]
+        sig = [min((a * h + c) % _P for h in hs) for a, c in _MINHASH_AB[: b * r]]
+        for j in range(b):
+            key = "-".join([str(j)] + [str(v) for v in sig[j * r : j * r + r]])
+            buckets[key].append(doc_id)
+    return {
+        (x, y)
+        for ids in buckets.values()
+        if len(ids) <= bucket_cap
+        for x in ids
+        for y in ids
+        if x < y
+    }
+
+
+@pytest.mark.parametrize("n_docs", [100, 20_000])
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_minhash_candidate_pairs_match_brute_force(spark, id_type, n_docs):
+    """Exact pair-set equality with the pure-Python reference at the
+    legacy (4, 2) and the widest (8, 4) banding: a bucket of exactly
+    ``bucket_cap`` copies pairs in full, a flood of ``bucket_cap + 1``
+    copies pairs not at all, and a repeated doc_id row never pairs
+    with itself."""
+    import random
+
+    from boilerpipe_coffee_spark.operators.dedup import minhash_candidate_pairs
+
+    cap = 5
+    rng = random.Random(11)
+    vocab = ["w%02d" % i for i in range(60)]
+    rows = []
+    for i in range(24):  # near-dup families: base + one-word variants
+        base = [rng.choice(vocab) for _ in range(30)]
+        rows.append((i, " ".join(base)))
+        if i % 3 == 0:
+            base[rng.randrange(30)] = "zzvariant"
+            rows.append((100 + i, " ".join(base)))
+    at_cap = " ".join(rng.choice(vocab) for _ in range(25)) + " capped bucket"
+    flood = " ".join(rng.choice(vocab) for _ in range(25)) + " flood bucket"
+    rows += [(200 + k, at_cap) for k in range(cap)]
+    rows += [(300 + k, flood) for k in range(cap + 1)]
+    rows += [rows[0], (400, "too short")]  # repeated doc_id row; no shingles
+    if id_type == "string":
+        rows = [("doc-%04d" % i, t) for i, t in rows]
+    want = _reference_candidate_pairs(rows, cap, n_docs)
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    got = {
+        (p.doc_a, p.doc_b)
+        for p in minhash_candidate_pairs(df, cap, n_docs=n_docs).collect()
+    }
+    assert got == want
+    ids = (lambda i: "doc-%04d" % i) if id_type == "string" else (lambda i: i)
+    capped = {
+        (ids(200 + x), ids(200 + y)) for x in range(cap) for y in range(x + 1, cap)
+    }
+    assert capped <= got
+    assert not any(ids(300) <= a <= ids(305) for pair in got for a in pair)
+    assert all(a != b for a, b in got)
+
+
 def test_dedup_incremental_semantics(spark, tmp_path):
     """Planted split-aware corpus: exact/near matches across the
     batch boundary are flagged with the MIN existing doc_id;

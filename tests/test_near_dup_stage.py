@@ -85,3 +85,44 @@ def test_near_dup_keep_final_subset_of_keep(spark):
     )
     rowz = mins.collect()
     assert all(r.k == 1 and r.mn == r.cluster_id for r in rowz)
+
+
+def _features_mirror(text):
+    """Pure-Python n_tokens / dup_bigram_frac: the [^a-z0-9]+ token
+    split and Spark's round(double, 4) (HALF_UP on the shortest
+    decimal repr -- Python's round() is banker's)."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    toks = [t for t in re.split("[^a-z0-9]+", text.lower()) if t]
+    grams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+    dup = (len(grams) - len(set(grams))) / max(len(grams), 1)
+    dup = float(Decimal(repr(dup)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+    return len(toks), dup
+
+
+def test_content_features_match_python_mirror(spark):
+    """n_tokens and dup_bigram_frac over a long document (the bigram
+    pass must stay linear in its length), a repetition-heavy one,
+    non-ASCII text, and texts with fewer than 2 tokens."""
+    import random
+
+    rng = random.Random(3)
+    vocab = BASE.split() + BASE2.split()
+    texts = {
+        "doc-long": " ".join(rng.choice(vocab) for _ in range(3500)),
+        "doc-rep": "buy now and save big " * 40 + "final words here",
+        "doc-utf": "Café naïve Über straße 東京 über café NAÏVE déjà vu, "
+        "ça va? Ωmega ünïcode café",
+        "doc-one": "Hello!!!",
+        "doc-none": "— … ¡¿",
+    }
+    extracted = spark.createDataFrame(
+        [_doc(k, v) for k, v in texts.items()], OUTPUT_SCHEMA
+    )
+    got = {
+        r.doc_id: (r.n_tokens, r.dup_bigram_frac)
+        for r in content_features(extracted).collect()
+    }
+    assert got == {k: _features_mirror(v) for k, v in texts.items()}
+    assert got["doc-long"][0] == 3500 and got["doc-one"][0] == 1

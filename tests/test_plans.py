@@ -4,6 +4,7 @@ are the 100 TB invariants -- a scan that reads all columns or a
 cosine query that plans a shuffled cartesian would regress silently
 without them."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from boilerpipe_coffee_spark.operators import extract
@@ -231,6 +232,49 @@ def test_simhash_pairs_plan_has_no_presentation_sort_inside(spark):
     assert len(range_parts) == 1, range_parts  # the final orderBy only
     assert "doc_a" in range_parts[0]
     assert "chunk_key" in plan  # join keyed on the combined chunk key
+
+
+@pytest.mark.parametrize("n_docs", [100, 20_000])
+def test_minhash_candidate_pairs_plan_runs_signatures_once(spark, n_docs):
+    """The Arrow signature pass must have ONE consumer at every scale
+    (n_docs on both sides of the 16,384-row barrier crossover): a band
+    self-join re-runs it once per alias (AQE never reuses the exchange
+    across the aliases), so the plan has exactly one MapInPandas and
+    no join keyed on band_key."""
+    import re
+
+    from boilerpipe_coffee_spark.operators.dedup import (
+        minhash_candidate_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(minhash_candidate_pairs(docs, n_docs=n_docs))
+    assert plan.count("MapInPandas") == 1, plan
+    assert not re.search(r"Join[^\n]*band_key", plan), plan
+
+
+def test_resolve_components_reads_pairs_once(spark):
+    """Both edge orientations come from one pass over ``pairs``: a
+    counter inside the pairs plan sees every pair row exactly once
+    (a union of two selects would run the pairs plan twice)."""
+    import pandas as pd
+
+    from boilerpipe_coffee_spark.operators.dedup import resolve_components
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    raw = spark.createDataFrame(
+        pd.DataFrame({"doc_a": [1, 2, 5, 7], "doc_b": [2, 3, 6, 9]})
+    )
+    pairs = raw.mapInPandas(tap, raw.schema)
+    labels = {r.doc_id: r.cluster_id for r in resolve_components(pairs).collect()}
+    assert labels == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7, 9: 7}
+    assert seen.value == 4
 
 
 def test_pack_concat_split_has_no_single_reducer(spark):
