@@ -42,9 +42,10 @@ def entry(spark: SparkSession) -> DataFrame:
     import os
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    docs_parquet = Path(sf_dir) / "documents.parquet"
-    if docs_parquet.exists():
-        spark.read.parquet(str(docs_parquet)).count()
+    if (Path(sf_dir) / "documents.parquet").exists():
+        from boilerpipe_coffee_spark.operators.scanspread import read_table
+
+        read_table(spark, sf_dir, "documents").count()
     return _flagship(spark, "ArticleExtractor")
 
 

@@ -28,6 +28,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import TOKENS as _TOKENS
+from ..functions import TOKENS_DUCK as _TOKENS_DUCK
+from ..functions import doc_stage
+from ..functions import h64 as _h64
+from ..functions import h64_duck as _h64_duck
+from ..functions import shingle_set
+from ..functions import shingles_duck as _mk_shingles_duck
+from .scanspread import read_table
+
 # md5-hex prefix -> bigint, identical in Spark and DuckDB
 # Spark:  conv(substring(md5(x), 1, 15), 16, 10)::bigint
 # DuckDB: ('0x' || substring(md5(x), 1, 15))::BIGINT
@@ -101,30 +110,6 @@ def minhash_banding(n_docs: int) -> "tuple[int, int]":
     return b, r
 
 
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
-) -> DataFrame:
-    """Driver-table reader; ``spread=True`` applies the conditional
-    scan-parallelism floor (see :mod:`.scanspread`) for the
-    compute-heavy signature/shingle stages, which a single-row-group
-    test table would otherwise serialize on one core."""
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread:
-        from .scanspread import spread_scan
-
-        df = spread_scan(spark, df, path)
-    return df
-
-
-from ..functions import h64 as _h64  # noqa: E402  (shared cross-engine hash)
-
-
-from ..functions import TOKENS as _TOKENS
-from ..functions import TOKENS_DUCK as _TOKENS_DUCK
-from ..functions import h64_duck as _h64_duck
-from ..functions import shingles_duck as _mk_shingles_duck
-
 _SHINGLES_DUCK = _mk_shingles_duck(3)
 
 # band-bucket skew cap, shared by the Spark operator AND the DuckDB
@@ -137,7 +122,7 @@ BUCKET_CAP = 64
 
 
 def dedup_exact(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.groupBy(F.md5("text").alias("content_hash"))
         .agg(
@@ -160,7 +145,7 @@ FROM documents GROUP BY md5(text) ORDER BY content_hash
 
 def dedup_ngram_jaccard(spark, sf_dir, threshold: float = 0.5):
     docs = (
-        _t(spark, sf_dir, "documents")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_TOKENS).alias("toks"))
         .select(
             "doc_id",
@@ -287,9 +272,9 @@ def minhash_candidate_pairs(
 def _minhash_pairs(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     # corpus size from the UN-spread scan (parquet-footer metadata
     # count); the spread frame's count() would execute the repartition
-    n_docs = _t(spark, sf_dir, "documents").count()
+    n_docs = read_table(spark, sf_dir, "documents").count()
     return minhash_candidate_pairs(
-        _t(spark, sf_dir, "documents", spread=True),
+        read_table(spark, sf_dir, "documents", spread=True),
         bucket_cap,
         n_docs=n_docs,
     )
@@ -314,22 +299,6 @@ def dedup_minhash_lsh(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     )
 
 
-def _doc_id_sql_type(df: DataFrame) -> str:
-    """Output-schema type for doc_id in the vectorized signature
-    stages.  Only string/int/bigint are supported -- anything else
-    (decimal, struct, ...) must be rejected loudly rather than
-    silently mis-declared as bigint in the mapInPandas schema."""
-    dt = dict(df.dtypes)["doc_id"]
-    if dt == "string":
-        return "string"
-    if dt in ("int", "bigint", "smallint", "tinyint"):
-        return "bigint"
-    raise TypeError(
-        f"unsupported doc_id dtype {dt!r} for the signature stage "
-        "(expected string or an integer type)"
-    )
-
-
 def minhash_sigs_df(docs_in: DataFrame, n_sig: int = 8) -> DataFrame:
     """(doc_id, text) -> (doc_id, mh0..mh{n_sig-1}): the minhash
     signatures (default: the legacy 8), computed in ONE map-side
@@ -345,13 +314,8 @@ def minhash_sigs_df(docs_in: DataFrame, n_sig: int = 8) -> DataFrame:
     JVM-side, no corpus-sized string shuffle, and the signature stage
     becomes embarrassingly parallel.  Values are bit-identical to the
     DuckDB oracle CTEs (md5 hex prefix -> int64; exact integer affine
-    mins; tokenizer is the shared ASCII [^a-z0-9]+ class, same as
-    TOKENS/TOKENS_DUCK)."""
-    import hashlib
-    import re
-
+    mins; tokenizer and hash are the shared ``functions`` twins)."""
     import numpy as np
-    import pandas as pd
 
     if n_sig > len(_MINHASH_AB):
         raise ValueError(
@@ -361,52 +325,20 @@ def minhash_sigs_df(docs_in: DataFrame, n_sig: int = 8) -> DataFrame:
     ab = _MINHASH_AB[:n_sig]
     coeff_a = np.array([a for a, _ in ab], dtype=np.int64)[:, None]
     coeff_b = np.array([b for _, b in ab], dtype=np.int64)[:, None]
-    tok_re = re.compile(r"[^a-z0-9]+")
 
-    def sig_fn(batches):
-        # r9: per-task shingle-hash memo (the _gram_rows_df rationale:
-        # cross-doc shingle repetition measured 38x at sf1.0; bounded
-        # clear-on-overflow) + digest-slice md5 (first 15 hex chars ==
-        # first-8-bytes int >> 4, no hex round trip)
-        md5 = hashlib.md5
-        ifb = int.from_bytes
-        memo: dict = {}
+    def sig(toks, h):
+        if len(toks) < 3:
+            return ()
+        shingles = shingle_set(toks)
+        v = np.array(h(shingles), dtype=np.uint64)
+        hs = (v >> 4).astype(np.int64) % _P  # h60 % P
+        # a*h+b < 2^47: exact in int64, identical to JVM pmod
+        mins = ((coeff_a * hs + coeff_b) % _P).min(axis=1)
+        return [[m] for m in mins.tolist()]
 
-        def h60p(s):
-            h = memo.get(s)
-            if h is None:
-                h = (ifb(md5(s.encode()).digest()[:8], "big") >> 4) % _P
-                if len(memo) >= 1 << 20:
-                    memo.clear()
-                memo[s] = h
-            return h
-
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in tok_re.split((text or "").lower()) if t]
-                if len(toks) < 3:
-                    continue
-                shingles = {
-                    " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
-                }
-                hs = np.fromiter(
-                    (h60p(s) for s in shingles),
-                    dtype=np.int64,
-                    count=len(shingles),
-                )
-                # a*h+b < 2^45: exact in int64, identical to JVM pmod
-                sigs.append(((coeff_a * hs + coeff_b) % _P).min(axis=1))
-                ids.append(doc_id)
-            out = {"doc_id": ids}
-            for i in range(n_sig):
-                out[f"mh{i}"] = [s[i] for s in sigs]
-            yield pd.DataFrame(out)
-
-    schema = "doc_id " + _doc_id_sql_type(docs_in) + "".join(
-        f", mh{i} bigint" for i in range(n_sig)
+    return doc_stage(
+        docs_in, sig, ", ".join(f"mh{i} bigint" for i in range(n_sig))
     )
-    return docs_in.select("doc_id", "text").mapInPandas(sig_fn, schema)
 
 
 def minhash_bands_df(
@@ -441,7 +373,7 @@ def minhash_bands_df(
 def minhash_band_stats(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     """Monitoring companion to the skew guard: bucket-size histogram
     plus how many buckets/docs the cap would drop."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     counts = minhash_bands_df(
         docs, minhash_banding(docs.count())
     ).groupBy("band_key").agg(
@@ -559,76 +491,37 @@ def simhash_sigs_df(docs_in: DataFrame) -> DataFrame:
     same 64 independent bits.  The signature is the two's-complement
     signed 64-bit recompose (bit 63 contributes -2^63), matching
     Spark LongType / DuckDB BIGINT exactly."""
-    import hashlib
-    import re
-
     import numpy as np
-    import pandas as pd
 
-    tok_re = re.compile(r"[^a-z0-9]+")
     # bits 0..62 recompose positively; bit 63 is the sign bit
     powers = [1 << b for b in range(63)]
+    shifts = np.arange(32)
 
-    def sig_fn(batches):
-        # r9: per-task token-hash memo — the distinct-token vocabulary
-        # repeats across every document, so nearly all lookups hit
-        # (same bounded-memo pattern as minhash_sigs_df); hex windows
-        # come from the byte digest (chars 1-8 == bytes 0-4, chars
-        # 9-16 == bytes 4-8)
-        md5 = hashlib.md5
-        ifb = int.from_bytes
-        memo: dict = {}
+    def sig(toks, h):
+        distinct = set(toks)
+        if not distinct:
+            return ()
+        v = np.array(h(distinct), dtype=np.uint64)
+        # hex chars 1-8 are the high digest word, 9-16 the low one
+        hs_lo = (v >> 32).astype(np.int64)
+        hs_hi = (v & 0xFFFFFFFF).astype(np.int64)
+        bits = np.concatenate(
+            [(hs_lo[:, None] >> shifts) & 1, (hs_hi[:, None] >> shifts) & 1],
+            axis=1,
+        )  # (n, 64)
+        votes = (2 * bits - 1).sum(axis=0)  # +1/-1 per bit
+        val = sum(p for b, p in enumerate(powers) if votes[b] > 0)
+        if votes[63] > 0:
+            val -= 1 << 63  # two's-complement sign bit
+        return ([val],)
 
-        def h_lo_hi(t):
-            v = memo.get(t)
-            if v is None:
-                d = md5(t.encode()).digest()
-                v = (ifb(d[:4], "big"), ifb(d[4:8], "big"))
-                if len(memo) >= 1 << 20:
-                    memo.clear()
-                memo[t] = v
-            return v
-
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = {t for t in tok_re.split((text or "").lower()) if t}
-                if not toks:
-                    continue
-                pairs = [h_lo_hi(t) for t in toks]
-                hs_lo = np.fromiter(
-                    (p[0] for p in pairs),
-                    dtype=np.int64, count=len(pairs),
-                )
-                hs_hi = np.fromiter(
-                    (p[1] for p in pairs),
-                    dtype=np.int64, count=len(pairs),
-                )
-                bits = np.concatenate(
-                    [
-                        (hs_lo[:, None] >> np.arange(32)) & 1,
-                        (hs_hi[:, None] >> np.arange(32)) & 1,
-                    ],
-                    axis=1,
-                )  # (n, 64)
-                votes = (2 * bits - 1).sum(axis=0)  # +1/-1 per bit
-                val = sum(p for b, p in enumerate(powers) if votes[b] > 0)
-                if votes[63] > 0:
-                    val -= 1 << 63  # two's-complement sign bit
-                ids.append(doc_id)
-                sigs.append(val)
-            yield pd.DataFrame(
-                {"doc_id": ids, "simhash": pd.array(sigs, dtype="int64")}
-            )
-
-    schema = "doc_id " + _doc_id_sql_type(docs_in) + ", simhash bigint"
-    return docs_in.select("doc_id", "text").mapInPandas(sig_fn, schema)
+    return doc_stage(docs_in, sig, "simhash bigint")
 
 
 def dedup_simhash(spark, sf_dir):
     """64-bit SimHash over the distinct token set."""
     return simhash_sigs_df(
-        _t(spark, sf_dir, "documents", spread=True)
+        read_table(spark, sf_dir, "documents", spread=True)
     ).orderBy(
         "doc_id"
     )
@@ -703,8 +596,8 @@ def dedup_simhash_pairs(
     # inject a global range exchange per join side for nothing
     from .scanspread import barrier_pays
 
-    n_docs = _t(spark, sf_dir, "documents").count()  # metadata count
-    sig = simhash_sigs_df(_t(spark, sf_dir, "documents", spread=True))
+    n_docs = read_table(spark, sf_dir, "documents").count()  # metadata count
+    sig = simhash_sigs_df(read_table(spark, sf_dir, "documents", spread=True))
     # single join key = chunk_idx * 2^16 + chunk_val: one column to
     # window over AND to join on (shuffle partitioning reused)
     chunks = sig.select(
@@ -798,7 +691,7 @@ def simhash_chunk_stats(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     the surviving-candidate upper bound + ratio -- the number an
     operator watches to see a boilerplate flood before it sees a slow
     pairing join.  O(buckets) frame, no pair materialization."""
-    sig = simhash_sigs_df(_t(spark, sf_dir, "documents", spread=True))
+    sig = simhash_sigs_df(read_table(spark, sf_dir, "documents", spread=True))
     chunks = sig.select(
         "doc_id",
         F.explode(
@@ -872,34 +765,14 @@ def shingle_sets_df(docs_in: DataFrame) -> DataFrame:
     identical to ``list_distinct({shingles})`` in the oracle CTEs;
     set ORDER is unspecified on both sides (consumers use
     size/array_intersect only)."""
-    import re
 
-    import pandas as pd
+    def sets(toks, h):
+        if len(toks) < 3:
+            return ()
+        sh = list(shingle_set(toks))
+        return [sh], [len(sh)]
 
-    tok_re = re.compile(r"[^a-z0-9]+")
-
-    def sets_fn(batches):
-        for pdf in batches:
-            ids, sets_, sizes = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in tok_re.split((text or "").lower()) if t]
-                if len(toks) < 3:
-                    continue
-                sh = list(
-                    {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-                )
-                ids.append(doc_id)
-                sets_.append(sh)
-                sizes.append(len(sh))
-            yield pd.DataFrame(
-                {"doc_id": ids, "sh": sets_, "n_sh": sizes}
-            )
-
-    schema = (
-        "doc_id " + _doc_id_sql_type(docs_in)
-        + ", sh array<string>, n_sh int"
-    )
-    return docs_in.select("doc_id", "text").mapInPandas(sets_fn, schema)
+    return doc_stage(docs_in, sets, "sh array<string>, n_sh int")
 
 
 def dedup_minhash_verified(
@@ -928,7 +801,7 @@ def dedup_minhash_verified(
     set-build passes); now twice (1 sig + 1 pruned set-build)."""
     from .scanspread import barrier_pays
 
-    n_docs = _t(spark, sf_dir, "documents").count()  # metadata count
+    n_docs = read_table(spark, sf_dir, "documents").count()  # metadata count
     if barrier_pays(n_docs):
         pairs = _minhash_pairs(spark, sf_dir, bucket_cap).localCheckpoint()
         cand_ids = (
@@ -936,7 +809,7 @@ def dedup_minhash_verified(
             .union(pairs.select(F.col("doc_b").alias("doc_id")))
             .distinct()
         )
-        cand_docs = _t(spark, sf_dir, "documents", spread=True).join(
+        cand_docs = read_table(spark, sf_dir, "documents", spread=True).join(
             cand_ids, "doc_id", "left_semi"
         )
         sets = shingle_sets_df(cand_docs).localCheckpoint()
@@ -945,7 +818,7 @@ def dedup_minhash_verified(
         # the corpus passes they save (measured): keep the direct
         # lazy shape
         pairs = _minhash_pairs(spark, sf_dir, bucket_cap)
-        sets = shingle_sets_df(_t(spark, sf_dir, "documents"))
+        sets = shingle_sets_df(read_table(spark, sf_dir, "documents"))
     a = sets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("sh").alias("sh_a"),
@@ -1028,7 +901,7 @@ def dedup_incremental(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     symmetric ops; the oracle derives it from the same function."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     incoming = F.col("doc_id") % INCR_SPLIT_MOD == 0
     hashes = docs.select("doc_id", F.md5("text").alias("h"))
     exist_h = (
@@ -1769,7 +1642,7 @@ def dedup_clusters(spark, sf_dir, max_iters: int = 20):
     # unsorted pairs: no global sort paid
     pairs = _minhash_pairs(spark, sf_dir)
     labels = resolve_components(pairs, max_iters)
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return (
         docs.join(labels, "doc_id", "left")
         .select(

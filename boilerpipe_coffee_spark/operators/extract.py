@@ -3,12 +3,11 @@
 Two pipelines, both golden-exact against the reference:
 
 1. the PRODUCTION path (operators.arrow_extract.extract_arrow,
-   exported as ``extract``; :func:`extract_pandas` is the mapInPandas
-   reference variant).  One map stage: parse + filter chain + span
-   reassembly per document inside Arrow batches.  Documents are independent, so this is embarrassingly
-   parallel with ZERO shuffles -- the plan is scan -> python eval ->
-   sink, and at 10^12 documents the only costs are IO and CPU.  This is
-   deliberately NOT a translation of the reference's per-document loop
+   exported as ``extract``).  One map stage: parse + filter chain +
+   span reassembly per document inside Arrow batches.  Documents are
+   independent, so this is embarrassingly parallel with ZERO shuffles
+   -- the plan is scan -> python eval -> sink, and at 10^12 documents
+   the only costs are IO and CPU.  This is deliberately NOT a translation of the reference's per-document loop
    into many Spark stages: a per-doc-sequential filter chain gains
    nothing from inter-stage shuffles and pays the full exchange of the
    exploded block table (bigger than the input) at every stage.
@@ -27,7 +26,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,50 +40,6 @@ from pyspark.sql.types import (
 )
 
 from ..core.extractors import ARTICLE
-from ..sources import OUTPUT_SCHEMA
-from ..spans import extract_spans
-
-# ---------------------------------------------------------------- #
-# production path: one vectorized stage, no shuffle                 #
-# ---------------------------------------------------------------- #
-
-
-def extract_pandas(df: DataFrame, extractor: str = ARTICLE) -> DataFrame:
-    """(doc_id, spans) -> (doc_id, title, spans, error).
-
-    Reference parity: output spans match lib/Boilerpipe.js per document
-    (golden suite); documents on which the reference throws (quirk Q9 /
-    nested <a>) come back with error='reference_throw' and empty spans
-    instead of failing the job.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            titles, out_spans, errors = [], [], []
-            for spans in pdf["spans"]:
-                title, spans_out, error = extract_spans(_as_dicts(spans), extractor)
-                titles.append(title)
-                out_spans.append(spans_out)
-                errors.append(error)
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "title": titles,
-                    "spans": out_spans,
-                    "error": errors,
-                }
-            )
-
-    return df.mapInPandas(run, schema=OUTPUT_SCHEMA)
-
-
-def _as_dicts(spans):
-    # Arrow gives list[dict] for array<struct>; be tolerant of numpy
-    if spans is None:
-        return []
-    return [dict(s) for s in spans]
-
 
 # ---------------------------------------------------------------- #
 # staged path: exploded blocks DF + columnar stages + fusion tail   #

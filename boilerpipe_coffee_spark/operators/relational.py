@@ -18,12 +18,10 @@ covers the relational skeleton of every filter operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from .scanspread import read_table
 
 
 # ------------------------------------------------------------------ #
@@ -32,7 +30,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def q1_pricing_summary(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1999-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -64,11 +62,11 @@ ORDER BY l_returnflag, l_linestatus
 
 
 def q3_shipping_priority(spark, sf_dir):
-    cust = _t(spark, sf_dir, "customer").filter(
+    cust = read_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(orders.join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))),
                 F.col("l_orderkey") == F.col("o_orderkey"))
@@ -106,7 +104,7 @@ def numwords_rules_classify(spark, sf_dir):
     (Filters.coffee:529-553), applied to documents: word counts stand
     in for numWords, punctuation share for linkDensity.  Boundary NULLs
     fall through branches exactly like the JS undefined placeholders."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     nw = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
     docs = docs.select(
         "doc_id",
@@ -176,7 +174,7 @@ def running_sum_cutoff(spark, sf_dir):
     'terminator' doc (text containing 'comment') is seen with the
     running sum >= 2000, that doc and all later docs flip to
     non-content (Filters.coffee:454-476 shape)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("doc_id")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     nw = F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0))
@@ -222,7 +220,7 @@ FROM cum
 
 
 def keep_largest_per_group(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     rn = F.row_number().over(
         Window.partitionBy("source").orderBy(
             F.desc("n_chars"), F.desc("doc_id")
@@ -256,7 +254,7 @@ def sessionize_events(spark, sf_dir):
     a new segment starts when the time gap exceeds 30 minutes, then
     aggregate per segment -- the relational shape of
     BlockProximityFusion's merge + the metrics a fused block carries."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     epoch = F.unix_timestamp("ts")
     gap = epoch - F.lag(epoch).over(w)
@@ -288,7 +286,7 @@ def sessionize_native_window(spark, sf_dir):
     the lag rule "new segment when gap > 1800" -- so all four
     sessionization implementations share one oracle (SESSIONIZE_SQL).
     seg_id is recovered as the per-user rank of session start."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     sess = (
         ev.withColumn("tts", F.col("ts").cast("timestamp"))
         .groupBy(
@@ -344,7 +342,7 @@ FROM s GROUP BY user_id, seg_id ORDER BY user_id, seg_id
 def fuse_adjacent_equal(spark, sf_dir):
     """Group consecutive docs (per source, doc_id order) with equal
     length-bucket and aggregate, mirroring equal-density fusion."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     bucket = (F.col("n_chars") / 100).cast("int")
     w = Window.partitionBy("source").orderBy("doc_id")
     changed = F.when(
@@ -392,7 +390,7 @@ FROM s GROUP BY source, seg_id ORDER BY source, seg_id
 
 
 def terminating_markers(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     lower = F.lower(F.col("text"))
     nw = F.size(F.regexp_extract_all(lower, F.lit("[a-z0-9]+"), 0))
     marker = (
@@ -427,7 +425,7 @@ FROM documents ORDER BY doc_id
 
 
 def min_clause_docs(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     clauses = F.split(F.concat(F.col("text"), F.lit(" ")), "[,.:;!?]+\\s+")
     has_clause = F.exists(
         clauses, lambda c: F.size(F.split(F.trim(c), "\\s+")) >= 5
@@ -453,7 +451,7 @@ FROM documents ORDER BY doc_id
 
 
 def split_sentences(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     sentences = F.split(F.col("text"), "\\.\\s+")
     out = docs.select(
         "doc_id", F.posexplode(sentences).alias("sentence_idx", "sentence")
@@ -501,7 +499,7 @@ def udtf_sentence_explode(spark, sf_dir):
                     yield i, len(p)
 
     spark.udtf.register("bpc_sentences", Sentences)
-    _t(spark, sf_dir, "documents").createOrReplaceTempView("bpc_docs")
+    read_table(spark, sf_dir, "documents").createOrReplaceTempView("bpc_docs")
     return spark.sql(
         "SELECT doc_id, s.sentence_idx, s.sentence_len "
         "FROM bpc_docs, LATERAL bpc_sentences(text) s "
@@ -512,7 +510,7 @@ def udtf_sentence_explode(spark, sf_dir):
 def q6_forecast_revenue(spark, sf_dir):
     """TPC-H Q6 shape: tight filter + single agg -- the predicate
     pushdown showcase (filters reach the parquet scan)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01"))
@@ -544,7 +542,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 def events_rollup(spark, sf_dir):
     """ROLLUP aggregation (grouping-sets family, SURVEY 2.7 breadth):
     event counts and value sums by (event_type, day) with subtotals."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     day = F.date_format("ts", "yyyy-MM-dd")
     return (
         ev.select("event_type", day.alias("day"), "value")
@@ -578,15 +576,15 @@ def q5_local_supplier_volume(spark, sf_dir):
     customer shuffle on their keys (all big at scale), nation and the
     filtered region BROADCAST (25 / 1 rows at any SF) -- asserted in
     tests/test_plans.py."""
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    cust = _t(spark, sf_dir, "customer")
-    sup = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = read_table(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    sup = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01"))
         & (F.col("o_orderdate") < F.lit("1998-01-01"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("o_custkey") == F.col("c_custkey"))
@@ -631,8 +629,8 @@ def customers_without_big_urgent_orders(spark, sf_dir):
     per market segment.  The anti join shuffles both sides on the key
     (no broadcast -- both sides are corpus-sized at scale) and is the
     relational 'quarantine the unmatched' primitive."""
-    cust = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").filter(
+    cust = read_table(spark, sf_dir, "customer")
+    big = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderpriority") == "1-URGENT")
         & (F.col("o_totalprice") > 150000)
     )
@@ -664,8 +662,8 @@ def parts_shipped_early_semi(spark, sf_dir):
     """SEMI join: parts with at least one early shipment, per brand.
     left_semi keeps the probe side narrow (no payload columns from
     lineitem cross the shuffle)."""
-    part = _t(spark, sf_dir, "part")
-    early = _t(spark, sf_dir, "lineitem").filter(
+    part = read_table(spark, sf_dir, "part")
+    early = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") < F.lit("1995-09-01")
     )
     return (
@@ -696,8 +694,8 @@ def brand_set_ops(spark, sf_dir):
     """INTERSECT / EXCEPT over brand sets: large-size brands that were
     ordered early vs never.  Set ops dedupe via a hash aggregate on the
     full row -- same shuffle shape as groupBy, no row explosion."""
-    part = _t(spark, sf_dir, "part")
-    early = _t(spark, sf_dir, "lineitem").filter(
+    part = read_table(spark, sf_dir, "part")
+    early = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") < F.lit("1995-03-01")
     )
     large = part.filter(F.col("p_size") > 40).select("p_brand")
@@ -737,8 +735,8 @@ def q17_small_quantity_revenue(spark, sf_dir):
     quantity) decorrelated into an aggregate + join -- the form Catalyst
     produces and the only form that scales (the correlated version
     re-scans lineitem per row)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part")
     brand = part.filter(F.col("p_brand") == "Brand#1").select("p_partkey")
     avg_qty = li.groupBy("l_partkey").agg(
         (F.avg("l_quantity") * 0.8).alias("qty_cut")
@@ -771,7 +769,7 @@ def events_percentiles(spark, sf_dir):
     Scale note: exact percentile needs the group's values together --
     fine for bounded groups; unbounded cardinality would switch to
     approx_percentile (t-digest, mergeable map-side)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -798,7 +796,7 @@ def distinct_users_two_phase(spark, sf_dir):
     then count per type.  This is the salting-family rewrite for
     skewed distinct aggregation -- one hot event_type no longer funnels
     every raw event through a single reducer, only its distinct keys."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.select("event_type", "user_id")
         .distinct()
@@ -825,7 +823,7 @@ def asof_last_click_before_purchase(spark, sf_dir):
     are pre-deduped to max(event_id) per (user, second) so the oracle's
     tie-break is well-defined.  The DuckDB oracle uses its NATIVE
     ASOF JOIN, so the two formulations verify each other."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     e = F.unix_timestamp("ts")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -900,7 +898,7 @@ def range_join_nearby_events(spark, sf_dir, window_sec: int = 60):
     (the index side's bucket is unique), the shuffle is keyed on
     uniform (user, bucket), and nothing is quadratic.  The DuckDB
     oracle is the plain inequality self-join."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_timestamp("ts").alias("e")
     )
     b = F.floor(F.col("e") / window_sec)
@@ -969,7 +967,7 @@ def approx_distinct_kmv(spark, sf_dir, k: int = KMV_K):
     Exact count emitted alongside so the sketch error is visible."""
     from ..functions import h64
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     h = h64(F.col("user_id").cast("string"))
     d = ev.select("event_type", h.alias("h")).distinct()
     w = Window.partitionBy("event_type").orderBy("h")
@@ -1022,7 +1020,7 @@ def orders_cube(spark, sf_dir):
     """CUBE over (status, priority): all four grouping sets in one
     pass -- Spark expands to a single expand+aggregate, no re-scan per
     grouping set."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -1070,7 +1068,7 @@ def shared_sql_surface(spark, sf_dir):
     and executes SHARED_ANSI_SQL verbatim -- the DuckDB oracle is the
     IDENTICAL string, so this proves the SQL dialect subset, not just
     the DataFrame API, agrees across engines."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     out = spark.sql(SHARED_ANSI_SQL)
     # Spark sum(int CASE) yields bigint like DuckDB after the driver's
     # pandas fetch; cast defensively for engines that widen
@@ -1096,7 +1094,7 @@ def events_salted_agg(spark, sf_dir, n_salts: int = 16):
     of corpus size.  All aggregates here are reassociable, so results
     are identical to the direct groupBy; the oracle IS the direct
     form."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     salted = ev.withColumn(
         "_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salts))
     )
@@ -1131,7 +1129,7 @@ def events_json_props(spark, sf_dir):
     """Semi-structured property extraction without a UDF:
     ``get_json_object`` is a JVM expression, so the JSON parse stays
     inside whole-stage codegen (no python in the hot path)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         ev.select("event_type", k.alias("k"))

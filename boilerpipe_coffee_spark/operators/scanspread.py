@@ -100,3 +100,17 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
         # break the read path
         return df
     return df.repartition(target)
+
+
+def read_table(
+    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
+) -> DataFrame:
+    """The driver-table reader: ``<sf_dir>/<name>.parquet``.
+    ``spread=True`` applies :func:`spread_scan`, for the corpus-wide
+    compute-heavy stages a single-row-group table would otherwise
+    serialize on one core.  Cheap row-level queries and metadata
+    ``count()`` probes read un-spread, so they never pay the
+    repartition."""
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.parquet(path)
+    return spread_scan(spark, df, path) if spread else df

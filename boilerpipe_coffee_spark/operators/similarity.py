@@ -16,15 +16,15 @@ compute identical planes: w[p][d] = ((0x-prefix of md5('p:d')) % 2001
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import h60
 from ..functions import h64 as _h64
 from ..functions import h64_duck as _h64_duck
+from .scanspread import read_table
 
 _H64_VEC = _h64_duck("vec_id::VARCHAR")
 
@@ -34,22 +34,20 @@ TOP_K = 5
 N_QUERIES = 3  # vec_id 0..2 are the query vectors
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-table reader with the conditional scan-parallelism
-    floor (see :mod:`.scanspread`): every similarity operator runs
-    per-vector projection/dot-product work over the whole table, and
-    a single-row-group test table would otherwise serialize it on
-    one core.  The floor is a no-op on well-laid-out tables."""
-    from .scanspread import spread_scan
-
-    path = f"{sf_dir}/{name}.parquet"
-    return spread_scan(spark, spark.read.parquet(path), path)
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v double[]) over the embeddings table, with the scan
+    floor applied: every similarity operator runs per-vector
+    projection/dot-product work over the whole table, and a
+    single-row-group test table would otherwise serialize it on one
+    core.  The floor is a no-op on well-laid-out tables."""
+    return read_table(spark, sf_dir, "embeddings", spread=True).select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
 
 
 def plane_weight(p: int, d: int) -> float:
     """Deterministic hyperplane weight, identical to the SQL formula."""
-    h = int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:15], 16)
-    return (h % 2001 - 1000) / 1000.0
+    return (h60(f"{p}:{d}") % 2001 - 1000) / 1000.0
 
 
 def _dot(a, b):
@@ -68,9 +66,7 @@ def _norm(a):
 
 def cosine_topk(spark, sf_dir):
     """Brute-force cosine top-5 neighbors for query vectors 0..2."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q")
     )
@@ -125,9 +121,7 @@ def ann_lsh_buckets(spark, sf_dir):
     ``plane_weight`` fed to ``F.lit``)."""
     from pyspark.sql.functions import pandas_udf
 
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     planes = np.array(
         [
             [plane_weight(p, d) for d in range(1, DIM + 1)]
@@ -189,9 +183,7 @@ def dedup_embedding_cosine(spark, sf_dir, threshold: float = 0.45):
     :func:`dedup_embedding_lsh_pairs`: multi-table hyperplane LSH
     buckets -> capped in-bucket candidate join -> exact cosine verify,
     linear in corpus size."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     a = emb.alias("a")
     b = emb.alias("b")
     cos = F.round(
@@ -414,11 +406,23 @@ def _gather_verify_df(emb, cand):
 
     def verify_fn(batches):
         ids_s, ord_, m, nrm = bc.value
+
+        def rows(vec_ids):
+            # searchsorted lands on the NEAREST row for an id that is
+            # not in the matrix; that must fail, not verify a stranger
+            pos = np.minimum(np.searchsorted(ids_s, vec_ids), len(ids_s) - 1)
+            bad = ids_s[pos] != vec_ids
+            if bad.any():
+                raise KeyError(
+                    f"vec_id {vec_ids[bad][0]} is not in the verify matrix"
+                )
+            return ord_[pos]
+
         for pdf in batches:
             if not len(pdf):
                 continue
-            ia = ord_[np.searchsorted(ids_s, pdf["vec_a"].to_numpy())]
-            ib = ord_[np.searchsorted(ids_s, pdf["vec_b"].to_numpy())]
+            ia = rows(pdf["vec_a"].to_numpy())
+            ib = rows(pdf["vec_b"].to_numpy())
             num = np.einsum("ij,ij->i", m[ia], m[ib])
             den = nrm[ia] * nrm[ib]
             yield pd.DataFrame(
@@ -467,15 +471,13 @@ def dedup_embedding_lsh_pairs(
     adversarial flood corpus) pin this for the committed data."""
     from pyspark.sql import Window
 
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     # adaptive banding: one metadata-cheap count (parquet footer
     # statistics -- no data scan; taken on an UN-spread read so the
     # count never executes the scan-floor repartition) picks (B, T)
     # via the shared policy
     if n_rows is None:
-        n_rows = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+        n_rows = read_table(spark, sf_dir, "embeddings").count()
     b_planes, t_tables = emb_banding(n_rows)
     tb = emb.select(
         "vec_id",
@@ -556,11 +558,10 @@ def emb_bucket_stats(
     corpus grows (it is an upper bound on distinct candidate pairs:
     cross-table duplicates are not collapsed here -- bucket-local
     aggregation keeps the monitor O(buckets), no pair materialization)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     if n_rows is None:
-        n_rows = emb.count()
+        # un-spread metadata count, as in dedup_embedding_lsh_pairs
+        n_rows = read_table(spark, sf_dir, "embeddings").count()
     b_planes, t_tables = emb_banding(n_rows)
     tb = emb.select(
         "vec_id",
@@ -709,9 +710,7 @@ def ann_ivf_topk(spark, sf_dir):
     lower centroid id) and in-cell top-3 neighbors are returned for the
     cell of each query vector 0..2.  The scale path: candidate search
     touches one cell, not the corpus."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     cents = emb.filter(F.col("vec_id") < N_IVF_CELLS).select(
         F.col("vec_id").alias("cell_id"), F.col("v").alias("cv")
     )
@@ -830,9 +829,7 @@ def ann_ivf_trained_topk(spark, sf_dir):
     O(k * dim) state, independent of corpus size."""
     from pyspark.sql import Window
 
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     hk = _h64(F.col("vec_id").cast("string"))
     # top-8 by hash = TakeOrderedAndProject (per-partition partial
     # top-k + tiny final merge), NOT a global sort -- scale-safe

@@ -6,35 +6,19 @@ bit-identical md5-derived hashing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import TOKENS as _TOKENS
+from ..functions import TOKENS_DUCK as _TOKENS_DUCK
+from ..functions import doc_id_sql_type, doc_stage, tokens
+from .scanspread import read_table
 
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "with", "for", "a"],
     "de": ["der", "die", "das", "und", "ist", "nicht", "mit", "ein", "zu", "ich"],
     "fr": ["le", "la", "les", "et", "est", "pas", "avec", "un", "une", "je"],
 }
-
-from ..functions import TOKENS as _TOKENS
-from ..functions import TOKENS_DUCK as _TOKENS_DUCK
-
-
-def _t(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = False
-) -> DataFrame:
-    """Driver-table reader.  ``spread=True`` applies the conditional
-    scan-parallelism floor (see :mod:`.scanspread`) — used by the
-    corpus-wide compute-heavy queries, where a single-row-group test
-    table would otherwise serialize the whole operator on one core.
-    Cheap row-level queries stay un-spread so a pruned ``count()``
-    never pays the repartition."""
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread:
-        from .scanspread import spread_scan
-
-        df = spread_scan(spark, df, path)
-    return df
 
 
 def _arr_lit(words):
@@ -48,7 +32,7 @@ def _list_lit(words):
 def lang_id(spark, sf_dir):
     """n-gram/stopword heuristic language ID: distinct-token hits per
     language list, argmax with deterministic tie order en > de > fr."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.expr(f"array_distinct({_TOKENS})")
     hits = {
         lang: F.size(F.array_intersect(toks, F.expr(_arr_lit(words))))
@@ -129,13 +113,10 @@ def quality_expr():
     )
 
 
-def quality_score(spark, sf_dir, spread: bool = False):
+def quality_score(spark, sf_dir):
     """Composite quality score: length, mean word length, stopword
-    ratio, punctuation ratio -- the usual cheap pretraining filters.
-    ``spread`` applies the scan-parallelism floor — set by the
-    histogram-quantile consumer, whose count() cannot prune the
-    quality expression; the plain driver row stays un-spread."""
-    docs = _t(spark, sf_dir, "documents", spread=spread)
+    ratio, punctuation ratio -- the usual cheap pretraining filters."""
+    docs = read_table(spark, sf_dir, "documents")
     toks = F.expr(_TOKENS)
     n_tok = F.size(toks)
     mean_wl = F.round(
@@ -192,7 +173,7 @@ SELECT * FROM scored ORDER BY doc_id
 def token_count(spark, sf_dir):
     """Whitespace tokens + a BPE-ish regex token count (letter runs,
     digit runs, single punctuation marks)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     ws = F.size(F.expr("filter(split(text, '\\\\s+'), x -> x != '')"))
     bpe = F.size(
         F.regexp_extract_all(
@@ -223,7 +204,7 @@ FROM documents ORDER BY doc_id
 def doc_fingerprint(spark, sf_dir):
     """min-k sketch fingerprint: md5 over 8-char shingles (stride 4) of
     the normalized text; the 4 smallest hashes concatenated."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", " ")
     shingles = F.expr(
         "transform(sequence(1, greatest(length(_norm) - 7, 1), 4), "
@@ -267,7 +248,7 @@ def repetition_stats(spark, sf_dir):
     explode+groupBy formulation, proving the fold equivalent."""
     from ..functions import shingles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
 
     def runstats(grams_expr: str) -> str:
         # fold over sorted grams tracking (prev, run, max_run,
@@ -373,7 +354,7 @@ def top_terms(spark, sf_dir, k: int = 20):
     explode -> map-side-combined groupBy -> TakeOrdered top-k (partial
     per-partition top-k, tiny final merge -- never a global sort).
     Deterministic tie-break on the term itself."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     return (
         _tok_explode(docs)
         .groupBy("term")
@@ -422,22 +403,19 @@ def bigram_pmi(spark, sf_dir, k: int = 20, min_n: int = 5):
     of identical ints — bit-stable across engines, unlike ln which
     may differ by 1 ulp between libms), with the bigram string as
     tie-break; ln+round(4) applied AFTER selection.  Tokenizer =
-    the proven-hash-exact Python twin of the shared ``_TOKENS`` expr
-    (same regex/lower as ``_gram_rows_df`` / ``shingle_sets_df``)."""
-    import re
+    the shared Python twin :func:`functions.tokens`."""
     from collections import Counter
 
     import pandas as pd
 
-    docs = _t(spark, sf_dir, "documents", spread=True)
-    tok_re = re.compile(r"[^a-z0-9]+")
+    docs = read_table(spark, sf_dir, "documents", spread=True)
 
     def counts_fn(batches):
         uni_c: Counter = Counter()
         big_c: Counter = Counter()
         for pdf in batches:
             for text in pdf["text"]:
-                toks = [t for t in tok_re.split((text or "").lower()) if t]
+                toks = tokens(text)
                 uni_c.update(toks)
                 big_c.update(
                     a + " " + b for a, b in zip(toks, toks[1:])
@@ -537,7 +515,7 @@ def unigram_logprob_quality(spark, sf_dir):
     distinct-term table is 10^8-10^9 rows and a forced broadcast OOMs
     executors.  At test SFs AQE broadcasts it anyway; at scale it falls
     back to a term-keyed shuffle join, which is the correct plan."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     toks = _tok_explode(docs, "doc_id")
     # the vocab aggregate is materialized once per invocation (eager
     # localCheckpoint): it feeds BOTH the score join and the token
@@ -597,14 +575,9 @@ def tfidf_top_terms(spark, sf_dir, k: int = 3):
     NO broadcast hint: the distinct-term table is corpus-cardinality
     (10^8+ terms on web scale) and a forced broadcast OOMs executors;
     AQE broadcasts it at small SF and shuffle-joins at scale."""
-    import re
     from collections import Counter
 
-    import pandas as pd
-
-    from .dedup import _doc_id_sql_type
-
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     # per-doc term frequencies from ONE Arrow pass (r9): a document
     # lives wholly in one row, so a per-doc Counter gives the COMPLETE
     # (doc_id, term, tf) rows with no aggregation shuffle at all — the
@@ -614,31 +587,11 @@ def tfidf_top_terms(spark, sf_dir, k: int = 3):
     # stage.  Materialized once per invocation (eager localCheckpoint)
     # for its two consumers; tf is the compressed proxy (distinct
     # terms per doc), well under the raw token stream it replaces.
-    tok_re = re.compile(r"[^a-z0-9]+")
+    def term_freqs(toks, h):
+        c = Counter(toks)
+        return c.keys(), c.values()
 
-    def tf_fn(batches):
-        for pdf in batches:
-            ids, terms, tfs = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                c = Counter(
-                    t for t in tok_re.split((text or "").lower()) if t
-                )
-                ids.extend([doc_id] * len(c))
-                terms.extend(c.keys())
-                tfs.extend(c.values())
-            if ids:
-                yield pd.DataFrame(
-                    {"doc_id": ids, "term": terms, "tf": tfs}
-                )
-
-    tf = (
-        docs.select("doc_id", "text")
-        .mapInPandas(
-            tf_fn,
-            "doc_id " + _doc_id_sql_type(docs) + ", term string, tf long",
-        )
-        .localCheckpoint()
-    )
+    tf = doc_stage(docs, term_freqs, "term string, tf long").localCheckpoint()
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").cast("double").alias("n_docs"))
     scored = (
@@ -702,7 +655,7 @@ def contamination_check(spark, sf_dir):
     linear pass, no corpus-keyed shuffle except the doc_id groupBy."""
     from ..functions import shingles
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     sh = F.array_distinct(F.expr(shingles(CONTAM_K, "toks")))
     base = (
         docs.select("doc_id", F.expr(_TOKENS).alias("toks"))
@@ -786,7 +739,7 @@ def dup_span_stats(spark, sf_dir):
     window for the gaps-and-islands span count.  Within-doc repeats
     are deliberately NOT counted (that is ``repetition_stats``)."""
     return dup_span_frac_df(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
+        read_table(spark, sf_dir, "documents").select("doc_id", "text")
     ).orderBy("doc_id")
 
 
@@ -796,50 +749,16 @@ def _gram_rows_df(base: DataFrame, w: int) -> DataFrame:
     computed in a vectorized Arrow pass.  The declarative form
     (shingle HOF + posexplode + md5) is interpreted per gram and cost
     333 s at the 50k-doc rehearsal point vs DuckDB's 71 s for the
-    whole query; same exact integer math as ``h64``/``h64_duck``
-    (first 15 md5 hex chars), same tokenizer as
-    ``dedup.shingle_sets_df`` (proven hash-exact vs the oracle)."""
-    import hashlib
-    import re
+    whole query.  Cross-document repetition is exactly what this
+    operator hunts (boilerplate), so most windows hit the per-task
+    memo of :func:`functions.doc_stage` instead of paying an md5."""
 
-    import pandas as pd
+    def grams(toks, h):
+        pos = range(len(toks) - w + 1)
+        vs = h([" ".join(toks[i : i + w]) for i in pos])
+        return pos, [v >> 4 for v in vs]  # h60
 
-    from .dedup import _doc_id_sql_type
-
-    tok_re = re.compile(r"[^a-z0-9]+")
-
-    def grams_fn(batches):
-        # r9: per-task gram-hash memo — cross-document repetition is
-        # exactly what this operator hunts (boilerplate), measured 38x
-        # at sf1.0, so most windows hit the dict instead of paying an
-        # md5 round-trip.  Bounded (clear at 2^20 entries ≈ tens of
-        # MB) so a pathological all-unique corpus cannot OOM a worker.
-        # digest-slice instead of hexdigest: the first 15 hex chars
-        # are the first 7.5 bytes, so int.from_bytes(digest[:8]) >> 4
-        # is the same 60-bit value without the hex-string round trip.
-        md5 = hashlib.md5
-        ifb = int.from_bytes
-        memo: dict = {}
-        for pdf in batches:
-            ids, poss, gs = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in tok_re.split((text or "").lower()) if t]
-                n = len(toks) - w + 1
-                for i in range(max(n, 0)):
-                    g = " ".join(toks[i : i + w])
-                    h = memo.get(g)
-                    if h is None:
-                        h = ifb(md5(g.encode()).digest()[:8], "big") >> 4
-                        if len(memo) >= 1 << 20:
-                            memo.clear()
-                        memo[g] = h
-                    ids.append(doc_id)
-                    poss.append(i)
-                    gs.append(h)
-            yield pd.DataFrame({"doc_id": ids, "pos": poss, "g": gs})
-
-    schema = "doc_id " + _doc_id_sql_type(base) + ", pos int, g bigint"
-    return base.select("doc_id", "text").mapInPandas(grams_fn, schema)
+    return doc_stage(base, grams, "pos int, g bigint")
 
 
 def dup_span_frac_df(
@@ -1000,7 +919,7 @@ def dup_span_scrub(spark, sf_dir):
     to the docs, and a vectorized Arrow scrub pass (interval-union via
     prefix sum; no per-token Python)."""
     return dup_span_scrub_df(
-        _t(spark, sf_dir, "documents", spread=True).select(
+        read_table(spark, sf_dir, "documents", spread=True).select(
             "doc_id", "text"
         )
     ).orderBy("doc_id")
@@ -1026,7 +945,6 @@ def dup_grams_df(
     )
 
 
-_SCRUB_SPLIT_RE = None
 _SCRUB_FIND_RE = None
 
 
@@ -1051,13 +969,12 @@ def scrub_one(
 
     import numpy as np
 
-    global _SCRUB_SPLIT_RE, _SCRUB_FIND_RE
-    if _SCRUB_SPLIT_RE is None:
-        _SCRUB_SPLIT_RE = re.compile(r"[^a-z0-9]+")
+    global _SCRUB_FIND_RE
+    if _SCRUB_FIND_RE is None:
         _SCRUB_FIND_RE = re.compile(r"[a-zA-Z0-9]+")
 
     raw = text or ""
-    toks = [t for t in _SCRUB_SPLIT_RE.split(raw.lower()) if t]
+    toks = tokens(raw)
     splice = not normal_form
     if splice:
         spans = [m.span() for m in _SCRUB_FIND_RE.finditer(raw)]
@@ -1144,8 +1061,6 @@ def dup_span_scrub_df(
     gate is the planted byte-equality tests."""
     import pandas as pd
 
-    from .dedup import _doc_id_sql_type
-
     w = w or DUP_SPAN_W
     base = df.select("doc_id", F.col(text_col).alias("text"))
     ex = _gram_rows_df(base, w)
@@ -1190,7 +1105,7 @@ def dup_span_scrub_df(
 
     schema = (
         "doc_id "
-        + _doc_id_sql_type(base)
+        + doc_id_sql_type(base)
         + ", n_tokens bigint, removed_tokens bigint, scrubbed_text string"
     )
     return joined.mapInPandas(scrub_fn, schema)
@@ -1260,7 +1175,7 @@ def packing_stats(spark, sf_dir):
     naive one-doc-per-chunk packing, and the padding waste -- the
     numbers a pretraining data planner reads before choosing a packing
     strategy.  Pure map-side arithmetic + one small groupBy."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     n_tok = F.size(F.expr(_TOKENS))
     chunks = F.ceil(n_tok / F.lit(float(CONTEXT_LEN))).cast("bigint")
     per_doc = docs.select(
@@ -1318,7 +1233,7 @@ def stratified_sample(spark, sf_dir, frac: float = SAMPLE_FRAC):
     hash threshold survives repartitioning.)"""
     from ..functions import h64
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     picked = (h64(F.col("doc_id").cast("string")) % _SAMPLE_MOD) < int(
         frac * _SAMPLE_MOD
     )
@@ -1364,7 +1279,7 @@ def source_mixture_sample(
     passes also stay individually cheap."""
     from ..functions import h64
 
-    docs = _t(spark, sf_dir, "documents").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.size(F.expr(_TOKENS)).alias("nt")
     )
     per = docs.groupBy("source").agg(F.sum("nt").alias("tokens"))
@@ -1462,7 +1377,7 @@ def doc_chunks(spark, sf_dir):
     ``sequence`` + ``posexplode`` inside the row -- no join, no
     shuffle; linear in output size at any corpus scale.  Zero-token
     documents contribute zero chunks."""
-    docs = _t(spark, sf_dir, "documents", spread=True)
+    docs = read_table(spark, sf_dir, "documents", spread=True)
     nt = F.size(F.expr(_TOKENS))
     d = (
         docs.select("doc_id", nt.alias("n_tokens"))
@@ -1580,7 +1495,6 @@ def quality_histogram_quantiles(spark, sf_dir):
     import pandas as pd
 
     _stop = frozenset(STOPWORDS["en"])
-    _tok_re = _re.compile(r"[^a-z0-9]+")
     _punct_re = _re.compile(r"[^a-zA-Z0-9\s]", _re.ASCII)
 
     def q_parts(batches):
@@ -1591,7 +1505,7 @@ def quality_histogram_quantiles(spark, sf_dir):
                     nt.append(None); sh.append(None)
                     tl.append(None); pl.append(None)
                     continue
-                toks = [t for t in _tok_re.split(text.lower()) if t]
+                toks = tokens(text)
                 nt.append(len(toks))
                 sh.append(sum(1 for t in toks if t in _stop))
                 tl.append(len(text))
@@ -1602,7 +1516,7 @@ def quality_histogram_quantiles(spark, sf_dir):
             )
 
     parts = (
-        _t(spark, sf_dir, "documents", spread=True)
+        read_table(spark, sf_dir, "documents", spread=True)
         .select("text")
         .mapInPandas(
             q_parts,
@@ -1712,7 +1626,7 @@ def pack_concat_split(spark, sf_dir, window: int = None):
 
     The DuckDB oracle is the direct single-node form (one global
     window cumsum + range join), value-identical by construction."""
-    docs = _t(spark, sf_dir, "documents", spread=True).select(
+    docs = read_table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", F.expr(_TOKENS).alias("toks")
     )
     return pack_slices_df(docs, window, key_col="doc_id").select(
@@ -1930,7 +1844,7 @@ def pii_scrub(spark, sf_dir):
     partially-scrubbed chain input: counting on the original keeps
     each count a pure function of (text, one regex), identical in
     both engines regardless of what earlier classes replaced."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     scrubbed = F.col("text")
     cols = [F.col("doc_id")]
     for name, pat, token in PII_CLASSES:

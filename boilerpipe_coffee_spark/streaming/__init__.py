@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import extract
+from ..operators.scanspread import read_table
 from ..sources import INTERLEAVED_SCHEMA
 
 
@@ -292,7 +293,7 @@ def streaming_windowed_event_counts(spark, sf_dir, poll_timeout: float = 120.0):
     emitted rows equal the plain hourly aggregate -- the DuckDB oracle.
     """
     drops, out, ckpt = _work_dirs("win", sf_dir)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read_table(spark, sf_dir, "events")
     n_rows, max_ts = events.agg(
         F.count("*"), F.max("ts")
     ).collect()[0]
@@ -412,7 +413,7 @@ def streaming_dedup_first_seen(spark, sf_dir):
     their final value per key, which equals the batch dedup_exact
     answer independent of micro-batch boundaries."""
     drops, out, ckpt = _work_dirs("dedup", sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     docs.repartition(5).write.parquet(drops)
@@ -583,7 +584,7 @@ def streaming_sessionize(spark, sf_dir, poll_timeout: float = 120.0):
     import datetime as _dt
 
     drops, out, ckpt = _work_dirs("sess", sf_dir)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read_table(spark, sf_dir, "events")
     n_rows, max_ts = events.agg(F.count("*"), F.max("ts")).collect()[0]
     events.repartition(6).write.parquet(drops)
 
@@ -665,7 +666,7 @@ def streaming_click_purchase_join(spark, sf_dir):
     sentinel: they emit when both inputs have arrived, so the drained
     sink equals the batch/DuckDB join."""
     drops, out, ckpt = _work_dirs("ssjoin", sf_dir)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = read_table(spark, sf_dir, "events")
     events.repartition(6).write.parquet(drops)
 
     def side(kind):
@@ -768,7 +769,7 @@ def streaming_incremental_dedup(spark, sf_dir):
     )
 
     drops, out, ckpt = _work_dirs("incr", sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
     banding = minhash_banding(docs.count())

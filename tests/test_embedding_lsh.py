@@ -218,3 +218,27 @@ def test_verify_strategies_bit_identical(spark, monkeypatch):
     )
     assert gather == join
     assert len(gather) > 0
+
+
+def test_gather_verify_rejects_an_id_missing_from_the_matrix(spark):
+    """A candidate id that is not in the broadcast matrix must fail the
+    verify, not take the cosine of whichever row searchsorted lands
+    on."""
+    from boilerpipe_coffee_spark.operators.similarity import _gather_verify_df
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (2, [0.0, 1.0]), (4, [1.0, 1.0])],
+        "vec_id bigint, v array<double>",
+    )
+
+    def pairs(*rows):
+        return spark.createDataFrame(list(rows), "vec_a bigint, vec_b bigint")
+
+    got = _gather_verify_df(emb, pairs((0, 2), (2, 4))).collect()
+    assert sorted((r.vec_a, r.vec_b, round(r.raw, 6)) for r in got) == [
+        (0, 2, 0.0),
+        (2, 4, round(1 / math.sqrt(2), 6)),
+    ]
+    for bad in [(0, 3), (1, 4), (2, 9)]:
+        with pytest.raises(Exception, match="not in the verify matrix"):
+            _gather_verify_df(emb, pairs(bad)).collect()
