@@ -3,9 +3,11 @@ against the compiled behavior (``lib/Boilerpipe.js:560-1280``)
 including every output-visible quirk from SURVEY.md section 2.8.
 
 Each filter is a callable ``process(document) -> bool`` mutating the
-document in place, exactly like the reference.  The Spark engine uses
-these inside Arrow-batched UDFs (operators/extract.py) and mirrors the
-stateless ones as columnar DataFrame stages (operators/columnar.py).
+document in place, exactly like the reference.  The Spark engine runs
+these inside its Arrow batch stages (operators/arrow_extract.py and the
+staged path's fusion tail, operators/fusion.py); the staged path
+mirrors the stateless filters its chains use as columnar DataFrame
+stages (operators/columnar.py).
 """
 
 from __future__ import annotations

@@ -6,13 +6,16 @@ inside whole-stage codegen -- no Python in the hot path -- and share a
 single window spec, so Catalyst plans ONE exchange on doc_id reused by
 every stage.
 
+Only the stages a staged chain uses live here; the order-dependent
+filters run in the fusion tail (operators.fusion) on the core filters.
+
 Boundary semantics (quirk Q2): the reference's prev/next at document
 edges are undefined-featured placeholders whose comparisons are all
 false.  Spark ``lag``/``lead`` NULLs give the same result (NULL
-predicate -> not true), EXCEPT ``!=``, which JS evaluates true for
-undefined -- spelled out explicitly where it occurs
-(density_rules_classifier).  Media rows ride along with NULL features
-(sorted after all blocks) and are never reclassified.
+predicate -> not true); a ``!=`` comparison would need the NULL spelled
+out, because JS evaluates it true for undefined.  Media rows ride along
+with NULL features (sorted after all blocks) and are never
+reclassified.
 """
 
 from __future__ import annotations
@@ -44,11 +47,6 @@ def _keep_media(df: DataFrame, col: str, new_value) -> DataFrame:
 def mark_everything_content(df: DataFrame) -> DataFrame:
     """MarkEverythingContentFilter (Filters.coffee:70-74)."""
     return _keep_media(df, "is_content", F.lit(True))
-
-
-def inverted_filter(df: DataFrame) -> DataFrame:
-    """InvertedFilter (Filters.coffee:78-87)."""
-    return _keep_media(df, "is_content", ~F.col("is_content"))
 
 
 def terminating_blocks_finder(df: DataFrame) -> DataFrame:
@@ -108,44 +106,6 @@ def num_words_rules_classifier(df: DataFrame) -> DataFrame:
     return _keep_media(df, "is_content", decision)
 
 
-def density_rules_classifier(df: DataFrame) -> DataFrame:
-    """DensityRulesClassifier (Filters.coffee:561-592).  Note
-    ``next.textDensity != 0`` is TRUE for the JS undefined boundary ->
-    coalesce the NULL to true."""
-    prev_ld = F.lag("link_density").over(_w())
-    prev_td = F.lag("text_density").over(_w())
-    next_td = F.lead("text_density").over(_w())
-    curr_ld = F.col("link_density")
-    curr_td = F.col("text_density")
-
-    decision = F.when(
-        curr_ld <= 0.333333,
-        F.when(
-            prev_ld <= 0.555556,
-            F.when(
-                curr_td <= 9,
-                F.when(
-                    next_td <= 10,
-                    F.when(prev_td > 4, F.lit(True)).otherwise(F.lit(False)),
-                ).otherwise(F.lit(True)),
-            ).otherwise(
-                # curr_td > 9: content iff next.textDensity != 0
-                # (undefined != 0 is true in JS)
-                F.coalesce(next_td != 0, F.lit(True))
-            ),
-        ).otherwise(
-            F.coalesce(
-                F.when(next_td > 11, F.lit(True)).otherwise(F.lit(False)),
-                F.lit(False),
-            )
-        ),
-    ).otherwise(F.lit(False))
-    # NULL prev_ld (first block): JS takes the else-branch (undefined
-    # <= x is false) -> next_td > 11 decides.  Spark's when(prev_ld <=
-    # ..) with NULL falls to otherwise -> same branch.  curr never NULL.
-    return _keep_media(df, "is_content", F.coalesce(decision, F.lit(False)))
-
-
 def ignore_blocks_after_content(df: DataFrame, min_words: int = 60) -> DataFrame:
     """IgnoreBlocksAfterContentFilter (Filters.coffee:454-476): running
     sum of numFullTextWords over content blocks; from the first
@@ -165,108 +125,3 @@ def ignore_blocks_after_content(df: DataFrame, min_words: int = 60) -> DataFrame
         "is_content",
         F.when(hit == 1, F.lit(False)).otherwise(F.col("is_content")),
     )
-
-
-def keep_largest_block(df: DataFrame) -> DataFrame:
-    """KeepLargestBlockFilter (Filters.coffee:307-341) as a per-group
-    argmax: row_number over (isContent desc, numWords desc, position
-    desc) -- the position desc implements the ties-pick-later reduce
-    (quirk Q8).  Documents with >=2 blocks and zero content blocks set
-    error='reference_throw' (quirk Q9: the reference crashes there)."""
-    wdoc = Window.partitionBy("doc_id")
-    n_blocks = F.sum(F.when(~F.col("is_media"), 1).otherwise(0)).over(wdoc)
-    n_content = F.sum(
-        F.when(F.col("is_content") & ~F.col("is_media"), 1).otherwise(0)
-    ).over(wdoc)
-    rn = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy(
-            F.col("is_media").asc(),
-            F.col("is_content").desc_nulls_last(),
-            F.col("num_words").desc_nulls_last(),
-            F.col("block_offset").desc_nulls_last(),
-        )
-    )
-    df = df.withColumn("_n_blocks", n_blocks).withColumn("_rn", rn).withColumn(
-        "_n_content", n_content
-    )
-    is_largest = (F.col("_rn") == 1) & F.col("is_content")
-    new_content = (
-        F.when(F.col("_n_blocks") < 2, F.col("is_content"))
-        .when(is_largest, F.lit(True))
-        .otherwise(F.lit(False))
-    )
-    new_error = F.when(
-        (F.col("_n_blocks") >= 2) & (F.col("_n_content") == 0),
-        F.lit("reference_throw"),
-    ).otherwise(F.col("error"))
-    df = _keep_media(df, "is_content", new_content)
-    df = df.withColumn("error", new_error)
-    return df.drop("_n_blocks", "_rn", "_n_content")
-
-
-def min_clause_words(df: DataFrame, min_words: int = 5,
-                     accept_without_delimiter: bool = False) -> DataFrame:
-    """MinClauseWordsFilter (Filters.coffee:121-156): a content block
-    survives iff some delimiter-terminated clause has >= min_words
-    whitespace-separated pieces (leading empties count, like JS
-    String.split).  Clause split regex: the JS literal has a non-regex
-    ``\\Z`` which is a plain 'Z' -- kept faithfully."""
-    clauses = F.split(F.concat(F.col("text"), F.lit(" ")), r"\b[,.:;!?]+(?:\s+|Z)")
-    candidates = (
-        clauses
-        if accept_without_delimiter
-        else F.slice(clauses, 1, F.greatest(F.size(clauses) - 1, F.lit(0)))
-    )
-    has_clause = F.exists(
-        candidates, lambda c: F.size(F.split(c, r"\s+")) >= min_words
-    )
-    return _keep_media(
-        df,
-        "is_content",
-        F.when(F.col("is_content") & ~F.coalesce(has_clause, F.lit(False)), F.lit(False)).otherwise(
-            F.col("is_content")
-        ),
-    )
-
-
-def split_paragraph_blocks(df: DataFrame) -> DataFrame:
-    """SplitParagraphBlocksFilter (Filters.coffee:160-185) as
-    posexplode.  New blocks get Q11 fallback word counts
-    (split(/\\W+/).length), offsets 0 and NULL densities -- matching
-    the reference's TextBlock(paragraph) construction."""
-    blocks = df.filter(~F.col("is_media") & F.col("error").isNull())
-    passthrough = df.filter(F.col("is_media") | F.col("error").isNotNull())
-    paras = F.split(F.col("text"), r"[\n\r]+")
-    exploded = (
-        blocks.withColumn("_paras", paras)
-        .select(
-            "*",
-            F.posexplode_outer("_paras").alias("_pos", "_ptext"),
-        )
-        .withColumn("_nparas", F.size("_paras"))
-    )
-    split_nw = F.size(F.split(F.col("_ptext"), r"[^A-Za-z0-9_]+"))
-    out = (
-        exploded.withColumn(
-            "text",
-            F.when(F.col("_nparas") < 2, F.col("text")).otherwise(F.col("_ptext")),
-        )
-        .withColumn(
-            "num_words",
-            F.when(F.col("_nparas") < 2, F.col("num_words")).otherwise(split_nw),
-        )
-        .withColumn(
-            "block_offset",
-            F.when(F.col("_nparas") < 2, F.col("block_offset")).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "text_density",
-            F.when(F.col("_nparas") < 2, F.col("text_density")),
-        )
-        .withColumn(
-            "link_density",
-            F.when(F.col("_nparas") < 2, F.col("link_density")),
-        )
-        .drop("_paras", "_pos", "_ptext", "_nparas")
-    )
-    return out.unionByName(passthrough)

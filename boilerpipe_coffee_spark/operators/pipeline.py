@@ -26,7 +26,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import BooleanType, StructField, StructType
 
+from ..sources import INTERLEAVED_SCHEMA, OUTPUT_SCHEMA
 from .arrow_extract import extract_arrow as extract
 
 
@@ -217,12 +220,14 @@ def run_partitioned(
     }
 
 
-_BALANCED_MID_DDL = (
-    "doc_id string, title string, "
-    "spans array<struct<kind:string,text:string,media_ref:string,"
-    "`order`:int>>, error string, "
-    "raw array<struct<kind:string,text:string,media_ref:string,"
-    "offset:int>>, done boolean"
+# extract_balanced's intermediate: extracted columns, the raw spans of
+# a giant document, and whether the row is already extracted
+_BALANCED_MID = StructType(
+    OUTPUT_SCHEMA.fields
+    + [
+        StructField("raw", INTERLEAVED_SCHEMA["spans"].dataType),
+        StructField("done", BooleanType()),
+    ]
 )
 
 
@@ -273,48 +278,23 @@ def extract_balanced(
     import pyarrow as pa
     from pyspark.storagelevel import StorageLevel
 
-    from .arrow_extract import _extract_one, _OUT_SPAN, extract_arrow
+    from .arrow_extract import (
+        _extract_one,
+        decode_spans,
+        extract_arrow,
+        list_column,
+    )
 
-    _IN_SPAN = pa.struct(
-        [
-            pa.field("kind", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("media_ref", pa.string()),
-            pa.field("offset", pa.int32()),
-        ]
-    )
-    mid_schema = pa.schema(
-        [
-            pa.field("doc_id", pa.string()),
-            pa.field("title", pa.string()),
-            pa.field("spans", pa.list_(_OUT_SPAN)),
-            pa.field("error", pa.string()),
-            pa.field("raw", pa.list_(_IN_SPAN)),
-            pa.field("done", pa.bool_()),
-        ]
-    )
+    pa_mid = to_arrow_schema(_BALANCED_MID)
+    out_type = pa_mid.field("spans").type
+    raw_type = pa_mid.field("raw").type
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            doc_ids = batch.column("doc_id").to_pylist()
-            spans_col = batch.column("spans")
-            in_offsets = spans_col.offsets.to_pylist()
-            valid = spans_col.is_valid().to_pylist()
-            values = spans_col.values
-            kinds = values.field("kind").to_pylist()
-            texts = values.field("text").to_pylist()
-            refs = values.field("media_ref").to_pylist()
-            offs = values.field("offset").to_pylist()
-
-            titles, errors, dones = [], [], []
-            flat_k, flat_t, flat_r, flat_o = [], [], [], []
-            out_lo = [0]
-            raw_k, raw_t, raw_r, raw_off = [], [], [], []
-            raw_lo = [0]
-            for i in range(len(doc_ids)):
-                lo, hi = (
-                    (in_offsets[i], in_offsets[i + 1]) if valid[i] else (0, 0)
-                )
+            doc_ids, bounds, spans = decode_spans(batch)
+            kinds, texts, refs, offs = spans
+            titles, out, errors, raw, dones = [], [], [], [], []
+            for lo, hi in bounds:
                 if probe is not None:
                     probe.add(1)
                 size = 0
@@ -322,62 +302,33 @@ def extract_balanced(
                     if kinds[j] == "text" and texts[j]:
                         size += len(texts[j])
                 if size <= giant_chars:
-                    title, ok, ot, orf, err = _extract_one(
-                        kinds, texts, refs, offs, lo, hi, extractor
-                    )
+                    title, rows, err = _extract_one(spans, lo, hi, extractor)
                     titles.append(title)
+                    out.append(rows)
                     errors.append(err)
+                    raw.append([])
                     dones.append(True)
-                    flat_k.extend(ok)
-                    flat_t.extend(ot)
-                    flat_r.extend(orf)
-                    flat_o.extend(range(len(ok)))
                 else:
                     titles.append(None)
+                    out.append([])
                     errors.append(None)
+                    raw.append(list(zip(kinds[lo:hi], texts[lo:hi],
+                                        refs[lo:hi], offs[lo:hi])))
                     dones.append(False)
-                    raw_k.extend(kinds[lo:hi])
-                    raw_t.extend(texts[lo:hi])
-                    raw_r.extend(refs[lo:hi])
-                    raw_off.extend(offs[lo:hi])
-                out_lo.append(len(flat_k))
-                raw_lo.append(len(raw_k))
 
-            out_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(flat_k, pa.string()),
-                    pa.array(flat_t, pa.string()),
-                    pa.array(flat_r, pa.string()),
-                    pa.array(flat_o, pa.int32()),
-                ],
-                fields=list(_OUT_SPAN),
-            )
-            raw_struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(raw_k, pa.string()),
-                    pa.array(raw_t, pa.string()),
-                    pa.array(raw_r, pa.string()),
-                    pa.array(raw_off, pa.int32()),
-                ],
-                fields=list(_IN_SPAN),
-            )
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(doc_ids, pa.string()),
                     pa.array(titles, pa.string()),
-                    pa.ListArray.from_arrays(
-                        pa.array(out_lo, pa.int32()), out_struct
-                    ),
+                    list_column(out_type, out),
                     pa.array(errors, pa.string()),
-                    pa.ListArray.from_arrays(
-                        pa.array(raw_lo, pa.int32()), raw_struct
-                    ),
+                    list_column(raw_type, raw),
                     pa.array(dones, pa.bool_()),
                 ],
-                schema=mid_schema,
+                schema=pa_mid,
             )
 
-    mid = df.mapInArrow(run, schema=_BALANCED_MID_DDL).persist(
+    mid = df.mapInArrow(run, schema=_BALANCED_MID).persist(
         StorageLevel.DISK_ONLY
     )
     normals = mid.filter(F.col("done")).select(

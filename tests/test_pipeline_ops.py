@@ -1,12 +1,11 @@
-"""Tests for the partitioned resume runner, standalone columnar
-filters, and multimodal plumbing."""
+"""Tests for the partitioned resume runner, the balanced extraction
+path, and multimodal plumbing."""
 
 import shutil
 
 import pytest
 
-from boilerpipe_coffee_spark.operators import extract, parse_blocks
-from boilerpipe_coffee_spark.operators import columnar
+from boilerpipe_coffee_spark.operators import extract
 from boilerpipe_coffee_spark.operators.multimodal import (
     decode_features,
     media_payloads,
@@ -98,81 +97,6 @@ def test_run_partitioned_scans_input_O1_times(spark, tmp_path_factory):
     assert s["docs_out"] == n
     # 8 buckets x 2 scans each would be 640; O(1) scans read 2n = 80
     assert acc.value <= 2 * n, f"input rows processed {acc.value} > {2 * n}"
-
-
-def test_columnar_inverted_and_mark(spark, t1_df):
-    blocks = parse_blocks(t1_df.limit(20))
-    marked = columnar.mark_everything_content(blocks)
-    inv = columnar.inverted_filter(marked)
-    rows = inv.filter(~inv.is_media & inv.error.isNull()).select(
-        "is_content"
-    ).collect()
-    assert rows and all(r.is_content is False for r in rows)
-
-
-def test_columnar_min_clause_words_matches_core(spark):
-    from boilerpipe_coffee_spark.core.filters import MinClauseWordsFilter
-    from helpers import document_with_parameters
-
-    texts = [
-        "This is a clause, because it is separated by a comma.",
-        "Real short",
-        "Lots of, very, very, very, small, clauses.",
-        "No delimiter here so it should not count as a clause at all",
-        "One two three four five, done.",
-    ]
-    doc = document_with_parameters(texts, None, [True] * len(texts))
-    MinClauseWordsFilter(5, False).process(doc)
-    expected = [bool(tb.is_content) for tb in doc.text_blocks]
-
-    rows = [
-        ("d0", "t", False, i, 0, t, 1, 10, 0, 10, 1, 10.0, 0.0, "text",
-         None, None, None, True, False)
-        for i, t in enumerate(texts)
-    ]
-    from boilerpipe_coffee_spark.operators.extract import BLOCKS_SCHEMA
-
-    df = spark.createDataFrame(rows, schema=BLOCKS_SCHEMA)
-    got = [
-        r.is_content
-        for r in columnar.min_clause_words(df).orderBy("block_offset").collect()
-    ]
-    assert got == expected
-
-
-def test_columnar_keep_largest_matches_core_semantics(spark):
-    from boilerpipe_coffee_spark.operators.extract import BLOCKS_SCHEMA
-
-    # doc A: largest is block 2 (50 words); tie case doc B: later wins
-    rows = [
-        ("A", "t", False, 0, 0, "x", 1, 10, 0, 10, 1, 10.0, 0.0, "text",
-         None, None, None, False, False),
-        ("A", "t", False, 1, 0, "y", 1, 50, 0, 50, 1, 50.0, 0.0, "text",
-         None, None, None, True, False),
-        ("A", "t", False, 2, 0, "z", 1, 10, 0, 10, 1, 10.0, 0.0, "text",
-         None, None, None, True, False),
-        ("B", "t", False, 0, 0, "p", 1, 20, 0, 20, 1, 20.0, 0.0, "text",
-         None, None, None, True, False),
-        ("B", "t", False, 1, 0, "q", 1, 20, 0, 20, 1, 20.0, 0.0, "text",
-         None, None, None, True, False),
-        # doc C: two blocks, zero content -> reference throw (Q9)
-        ("C", "t", False, 0, 0, "r", 1, 5, 0, 5, 1, 5.0, 0.0, "text",
-         None, None, None, False, False),
-        ("C", "t", False, 1, 0, "s", 1, 5, 0, 5, 1, 5.0, 0.0, "text",
-         None, None, None, False, False),
-    ]
-    df = spark.createDataFrame(rows, schema=BLOCKS_SCHEMA)
-    out = columnar.keep_largest_block(df).orderBy("doc_id", "block_offset")
-    got = [(r.doc_id, r.block_offset, r.is_content, r.error) for r in out.collect()]
-    assert got == [
-        ("A", 0, False, None),
-        ("A", 1, True, None),
-        ("A", 2, False, None),
-        ("B", 0, False, None),
-        ("B", 1, True, None),  # Q8 tie -> later block
-        ("C", 0, False, "reference_throw"),
-        ("C", 1, False, "reference_throw"),
-    ]
 
 
 def test_multimodal_decode(spark, t1_df):

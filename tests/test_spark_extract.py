@@ -1,6 +1,7 @@
 """Spark pipeline golden tests: both the production (zero-shuffle
-mapInPandas) and staged (columnar + applyInPandas) pipelines must
-reproduce the reference's golden span sequences on the t1 corpus."""
+mapInArrow) and staged (mapInArrow parse + columnar window stages +
+mapInArrow fusion tail) pipelines must reproduce the reference's golden
+span sequences on the t1 corpus."""
 
 import pytest
 
@@ -93,8 +94,14 @@ def test_unfiltered_paths_agree(spark, t1_df):
 
 def test_degenerate_span_inputs_both_paths(spark):
     """Empty span lists, NULL span lists, media-only docs, and NULL
-    text payloads must flow through BOTH paths without crashing, with
-    identical outputs (locks the Arrow offsets/validity handling)."""
+    text payloads must flow through the production, staged and
+    balanced paths without crashing, with identical outputs (locks the
+    Arrow offsets/validity handling).  The balanced path's giant_chars
+    sends the ``normal`` document through its raw giant passthrough."""
+    from boilerpipe_coffee_spark.operators.pipeline import (
+        extract_balanced_scoped,
+    )
+
     rows = [
         ("empty", []),
         ("null_spans", None),
@@ -113,12 +120,20 @@ def test_degenerate_span_inputs_both_paths(spark):
         r.doc_id: r
         for r in extract_staged(df, "KeepEverythingExtractor").collect()
     }
-    assert set(prod) == set(staged) == {r[0] for r in rows}
+    with extract_balanced_scoped(
+        df, "KeepEverythingExtractor", giant_chars=10
+    ) as bal:
+        balanced = {r.doc_id: r for r in bal.collect()}
+    assert set(prod) == set(staged) == set(balanced) == {r[0] for r in rows}
+
+    def as_tuple(r):
+        spans = [(s.kind, s.text, s.media_ref, s.order) for s in (r.spans or [])]
+        return r.title, spans, r.error
+
     for doc_id in prod:
-        a, b = prod[doc_id], staged[doc_id]
-        sa = [(s.kind, s.text, s.media_ref, s.order) for s in (a.spans or [])]
-        sb = [(s.kind, s.text, s.media_ref, s.order) for s in (b.spans or [])]
-        assert (a.title, sa, a.error) == (b.title, sb, b.error), doc_id
+        want = as_tuple(prod[doc_id])
+        assert as_tuple(staged[doc_id]) == want, doc_id
+        assert as_tuple(balanced[doc_id]) == want, doc_id
     for doc_id in ("empty", "null_spans", "null_text"):
         assert prod[doc_id].error is None and not prod[doc_id].spans
     media = [(s.kind, s.media_ref, s.order) for s in prod["media_only"].spans]
