@@ -1193,7 +1193,7 @@ def update_dedup_index(
     returned meta carries ``banding_stale``: when corpus growth moves
     :func:`minhash_banding` past the frozen policy, schedule a full
     rebuild at the next version roll (an epoch event, not a per-batch
-    one; rehearsed in tools/banding_epoch_rehearsal.py).
+    one; rehearsed at the 10k boundary in BASELINE.md r8).
 
     ``scrubbed`` asserts the representation of ``new_docs.text``
     against the prior index's frozen flag: pass the current run's

@@ -765,7 +765,6 @@ def dup_span_frac_df(
     df: DataFrame,
     text_col: str = "text",
     w: int = None,
-    persist_grams: bool = False,
 ) -> DataFrame:
     """DataFrame-level core of :func:`dup_span_stats`: per-doc
     cross-document duplicated-window stats over an arbitrary
@@ -781,17 +780,8 @@ def dup_span_frac_df(
     skew-robust choice at corpus scale.
 
     The Arrow gram stage feeds two consumers (the dup agg and the
-    island agg).  ``persist_grams=True`` persists it DISK_ONLY so it
-    runs once, attaching the handle as ``._dup_span_grams`` on the
-    returned frame — the CALLER unpersists after its action (the
-    extract_balanced pattern).  Measured A/B at 500k docs
-    (tools/dup_span_ab.py, interleaved medians, checksums equal):
-    recompute 62.6 s vs persist 70.8 s — writing the ~70M-row gram
-    intermediate costs MORE than recomputing the Arrow stage, so
-    recompute stays the default and is what the pipeline gate runs.
-    (At 50k the ranking flips, 12.9 vs 10.7 s — cache-resident
-    intermediate; the knob exists for deployments whose storage is
-    faster relative to CPU than this host's.)"""
+    island agg) and is recomputed for each: at 500k docs recompute
+    took 62.6 s vs 70.8 s with the grams persisted (BASELINE.md r8)."""
     from pyspark.sql import Window
 
     from ..functions import TOKENS
@@ -807,10 +797,6 @@ def dup_span_frac_df(
         .alias("n_windows"),
     )
     ex = _gram_rows_df(base, w)
-    if persist_grams:
-        from pyspark import StorageLevel
-
-        ex = ex.persist(StorageLevel.DISK_ONLY)
     dup = (
         ex.groupBy("g")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
@@ -829,7 +815,7 @@ def dup_span_frac_df(
         )
     )
     zero = F.lit(0).cast("bigint")
-    out = (
+    return (
         sized.join(agg, "doc_id", "left")
         .select(
             "doc_id",
@@ -843,9 +829,6 @@ def dup_span_frac_df(
             F.coalesce("dup_spans", zero).alias("dup_spans"),
         )
     )
-    if persist_grams:
-        out._dup_span_grams = ex
-    return out
 
 
 def _dup_span_sql(max_windows: int = 1000000) -> str:

@@ -295,7 +295,7 @@ def main() -> None:
     # anti-join -- measured at 500k: gate 201->89 s, write 86->31 s,
     # untouched stages flat (BASELINE.md r8).  Only the gram
     # INTERMEDIATE stays recompute
-    # (the dup_span_ab.py verdict); the gate's input frame is the
+    # (the r8 persist-vs-recompute A/B); the gate's input frame is the
     # cheap-to-cache, expensive-to-recompute side.
     dup_span_dropped = None
     flagged = None
@@ -571,7 +571,7 @@ def main() -> None:
     if index_meta is not None:
         # the epoch signal: corpus growth moved minhash_banding past
         # the index's frozen (b, r) -- schedule a full rebuild at the
-        # next version roll (tools/banding_epoch_rehearsal.py)
+        # next version roll (BASELINE.md r8 "banding_stale epoch")
         summary["banding_stale"] = index_meta["banding_stale"]
     if pii_totals is not None:
         summary["pii_scrubbed"] = pii_totals

@@ -666,8 +666,8 @@ def test_banding_stale_epoch_rebuild(spark, tmp_path_factory):
     at the new (b, r) must restore the adaptive policy (and clear the
     flag for subsequent rolls), and the rebuilt index must still
     catch exact and near-dup probes.  Tested at the cheap 1k
-    boundary; the 10k epoch with planted recall/cost numbers is
-    tools/banding_epoch_rehearsal.py -> BASELINE.md r8."""
+    boundary; the 10k epoch's planted recall/cost numbers are in
+    BASELINE.md r8 ("banding_stale epoch")."""
     from boilerpipe_coffee_spark.operators.dedup import (
         minhash_banding,
         update_dedup_index,
@@ -741,7 +741,7 @@ def test_banding_stale_epoch_rebuild(spark, tmp_path_factory):
 
 
 def test_chained_lifecycle_keep_set_and_roll(spark, tmp_path_factory):
-    """Fast twin of tools/lifecycle_rehearsal.py (500k evidence in
+    """Fast twin of ``tools/rehearse.py lifecycle`` (500k evidence in
     BASELINE.md r8): v1 build with EVERY gate on, then a v2
     incremental re-crawl through the same fully-gated job.  The v2
     keep-set must equal the operator-level recomputation (the same
@@ -751,7 +751,7 @@ def test_chained_lifecycle_keep_set_and_roll(spark, tmp_path_factory):
     checker implementations with the rehearsal tool so the two can
     never drift."""
     sys.path.insert(0, os.path.join(REPO, "tools"))
-    from lifecycle_rehearsal import check_index_roll, expected_keep_set
+    from rehearse import check_index_roll, expected_keep_set
 
     v1 = str(tmp_path_factory.mktemp("lc_v1"))
     v2 = str(tmp_path_factory.mktemp("lc_v2"))

@@ -1,5 +1,5 @@
-"""Deterministic synthetic corpora for the scale rehearsal
-(tools/scale_rehearsal.py): documents + embeddings tables with the
+"""Deterministic synthetic corpora for the scale rehearsals
+(tools/rehearse.py): documents + embeddings tables with the
 SAME shape as the driver-generated /root/testdata sf corpora
 (TESTDATA.md), at any row count -- so candidate-ratio curves can be
 measured on a consistent ladder up to sf1 (50k docs / 20k vectors),
