@@ -25,6 +25,9 @@ production composition.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -887,8 +890,8 @@ def dedup_incremental(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     standard dedup ops' job on the kept batch).
 
     Output, one row per incoming doc: ``exact_dup_of`` / ``near_dup_of``
-    = the minimum existing doc_id matched (null if none), ``keep`` =
-    both null.
+    = the minimum existing doc_id matched (-1 if none), ``keep`` =
+    both -1 (:func:`_probe`).
 
     Scale shape: both probes are joins keyed on content hash / band
     key -- linear in batch + corpus size, never all-pairs.  The skew
@@ -903,48 +906,62 @@ def dedup_incremental(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
 
     docs = read_table(spark, sf_dir, "documents")
     incoming = F.col("doc_id") % INCR_SPLIT_MOD == 0
-    hashes = docs.select("doc_id", F.md5("text").alias("h"))
+    existing = docs.filter(~incoming)
     exist_h = (
-        hashes.filter(~incoming)
+        existing.select("doc_id", F.md5("text").alias("h"))
         .groupBy("h")
         .agg(F.min("doc_id").alias("exact_dup_of"))
     )
-    exact = hashes.filter(incoming).join(exist_h, "h", "left").select(
-        "doc_id", "exact_dup_of"
-    )
-
     # band each SIDE separately (filter before the signature stage):
     # a single full-table bands frame consumed by both branches would
     # run the Arrow sig pass over every doc twice -- the filters do
     # not push through mapInPandas
     banding = minhash_banding(docs.count())
     ex_capped = (
-        minhash_bands_df(docs.filter(~incoming), banding)
+        minhash_bands_df(existing, banding)
         .withColumn("bn", F.count("*").over(Window.partitionBy("band_key")))
         .filter(F.col("bn") <= bucket_cap)
         .select(F.col("doc_id").alias("ex_id"), "band_key")
     )
+    return _probe(
+        docs.filter(incoming), exist_h, ex_capped, banding
+    ).orderBy("doc_id")
+
+
+def _probe(
+    batch: DataFrame,
+    exist_h: DataFrame,
+    ex_bands: DataFrame,
+    banding: "tuple[int, int]",
+) -> DataFrame:
+    """The one probe join (:func:`dedup_incremental`,
+    :func:`probe_dedup_index`): ``batch`` (doc_id, text) against the
+    existing (h, exact_dup_of) hashes and capped (ex_id, band_key)
+    bands -> (doc_id, exact_dup_of, near_dup_of, keep).
+
+    -1 means "no match": a nullable BIGINT round-trips through the
+    driver's pandas compare as float64 NaN on the DuckDB side (the r2
+    ::BIGINT lesson).  It is typed to the batch's doc_id dtype, since
+    pipeline corpora use STRING ids and driver corpora BIGINT."""
+    exact = (
+        batch.select("doc_id", F.md5("text").alias("h"))
+        .join(exist_h, "h", "left")
+        .select("doc_id", "exact_dup_of")
+    )
     near = (
-        minhash_bands_df(docs.filter(incoming), banding)
-        .join(ex_capped, "band_key")
+        minhash_bands_df(batch.select("doc_id", "text"), banding)
+        .join(ex_bands, "band_key")
         .groupBy("doc_id")
         .agg(F.min("ex_id").alias("near_dup_of"))
     )
-    # -1 sentinel for "no match": a nullable BIGINT column round-trips
-    # through the driver's pandas compare as float64 NaN on the DuckDB
-    # side (the r2 ::BIGINT lesson), so both engines emit the sentinel
-    return (
-        exact.join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("exact_dup_of", F.lit(-1)).alias("exact_dup_of"),
-            F.coalesce("near_dup_of", F.lit(-1)).alias("near_dup_of"),
-            (
-                F.col("exact_dup_of").isNull()
-                & F.col("near_dup_of").isNull()
-            ).alias("keep"),
-        )
-        .orderBy("doc_id")
+    sentinel = F.lit(-1).cast(batch.schema["doc_id"].dataType)
+    return exact.join(near, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("exact_dup_of", sentinel).alias("exact_dup_of"),
+        F.coalesce("near_dup_of", sentinel).alias("near_dup_of"),
+        (
+            F.col("exact_dup_of").isNull() & F.col("near_dup_of").isNull()
+        ).alias("keep"),
     )
 
 
@@ -1000,12 +1017,163 @@ DEDUP_INCREMENTAL_SQL = _incremental_sql()
 
 DEDUP_INDEX_META = "index_meta.json"
 
+# index sub-dir -> (catalog letter, bucket column, DDL; {dt} = doc_id type)
+_INDEX_TABLES = {
+    "hashes": ("h", "h", "`h` string, `exact_dup_of` {dt}"),
+    "band_counts": ("c", "band_key", "`band_key` string, `bn` bigint"),
+    "bands": ("b", "band_key", "`ex_id` {dt}, `band_key` string"),
+    "dup_grams": ("g", "g", "`g` bigint"),
+}
+
 
 def _index_tag(index_dir: str) -> str:
     import hashlib
-    import os
 
     return hashlib.md5(os.path.abspath(index_dir).encode()).hexdigest()[:8]
+
+
+def _index_table_name(index_dir: str, sub: str) -> str:
+    return f"bpc_dedup_idx_{_INDEX_TABLES[sub][0]}_{_index_tag(index_dir)}"
+
+
+def _index_table(
+    spark: SparkSession, index_dir: str, meta: dict, sub: str
+) -> DataFrame:
+    """Register ``<index_dir>/<sub>`` bucketed under its catalog name
+    with its declared DDL: a legitimately EMPTY table (every band
+    bucket capped, no surviving dup gram) has no file to infer from."""
+    from ..sources import register_bucketed
+
+    _, key, ddl = _INDEX_TABLES[sub]
+    return register_bucketed(
+        spark, _index_table_name(index_dir, sub),
+        os.path.join(index_dir, sub), key, n_buckets=meta["n_buckets"],
+        schema=ddl.format(dt=meta["doc_id_type"]),
+    )
+
+
+def read_index_meta(index_dir: str) -> dict:
+    """``<index_dir>/index_meta.json``, refusing an index that cannot
+    be probed or rolled as recorded: one built before ``doc_id_type``
+    (and ``band_counts``) existed, or one that records
+    ``dup_span_scrubbed`` but has no ``dup_grams`` table."""
+    with open(os.path.join(index_dir, DEDUP_INDEX_META)) as f:
+        meta = json.load(f)
+    if "doc_id_type" not in meta:
+        raise ValueError(
+            f"{index_dir} has no doc_id_type in its meta (built before "
+            "update support) -- rebuild it once with build_dedup_index"
+        )
+    if meta.get("dup_span_scrubbed") and not os.path.isdir(
+        os.path.join(index_dir, "dup_grams")
+    ):
+        raise ValueError(
+            f"index at {index_dir} records dup_span_scrubbed but has no "
+            "dup_grams table -- rebuild it once with "
+            "build_dedup_index(..., dup_grams=...)"
+        )
+    return meta
+
+
+def _write_index(
+    docs: DataFrame,
+    out_dir: str,
+    policy: dict,
+    dup_grams: "DataFrame | None" = None,
+    prior_dir: "str | None" = None,
+) -> dict:
+    """The one index writer; a fresh build is a roll from no prior.
+    Each table is the batch's rows merged with ``prior_dir``'s table
+    when there is one, so a roll equals a fresh build over the union
+    corpus at the frozen banding (test-asserted).  Signatures (the
+    expensive text pass) are computed for ``docs`` only, so a roll
+    costs O(batch text + index size), never O(corpus text):
+
+    - hashes: union + groupBy min -- the global min doc_id per hash.
+    - band_counts: PRE-cap per-bucket counts, summed over batch and
+      prior.  The cap applies to these MERGED counts: a bucket that
+      crosses it only after the merge loses its PRIOR rows too, and a
+      capped band table alone has lost both the dropped rows and
+      their counts.
+    - bands: (ex_id, band_key) rows whose merged bucket fits the cap.
+    - dup_grams: the batch's list UNION the prior's -- a monotone
+      per-version boilerplate list.
+
+    ``policy`` is the prior's meta when rolling, else the build
+    arguments (``banding`` None = :func:`minhash_banding` on the
+    corpus count).  A roll's meta adds ``banding_stale``."""
+    from functools import reduce
+
+    from ..sources import write_bucketed
+
+    spark = docs.sparkSession
+    n_docs = policy.get("n_docs", 0) + docs.count()
+    banding = tuple(policy["banding"] or minhash_banding(n_docs))
+    n_buckets = policy["n_buckets"]
+
+    def write(sub: str, batch: "DataFrame | None", merge) -> DataFrame:
+        parts = [] if batch is None else [batch]
+        if prior_dir is not None:
+            parts.append(_index_table(spark, prior_dir, policy, sub))
+        name = _index_table_name(out_dir, sub)
+        write_bucketed(
+            merge(reduce(DataFrame.unionByName, parts)), name,
+            os.path.join(out_dir, sub), _INDEX_TABLES[sub][1],
+            n_buckets=n_buckets,
+        )
+        return spark.table(name)
+
+    write(
+        "hashes",
+        docs.select(
+            F.md5("text").alias("h"), F.col("doc_id").alias("exact_dup_of")
+        ),
+        lambda df: df.groupBy("h").agg(
+            F.min("exact_dup_of").alias("exact_dup_of")
+        ),
+    )
+    # persisted: the signature pass feeds both counts and bands
+    banded = minhash_bands_df(docs.select("doc_id", "text"), banding)
+    banded.persist()
+    ok = write(
+        "band_counts",
+        banded.select("band_key", F.lit(1).cast("bigint").alias("bn")),
+        lambda df: df.groupBy("band_key").agg(
+            F.sum("bn").cast("bigint").alias("bn")
+        ),
+    ).filter(F.col("bn") <= policy["bucket_cap"])
+    write(
+        "bands",
+        banded.select(F.col("doc_id").alias("ex_id"), "band_key"),
+        lambda df: df.join(ok.select("band_key"), "band_key", "left_semi"),
+    )
+    banded.unpersist()
+    # a roll carries the list forward only from a dup_span_scrubbed
+    # prior (update_dedup_index refuses batch grams for any other)
+    if dup_grams is not None or (
+        prior_dir is not None and policy.get("dup_span_scrubbed")
+    ):
+        write(
+            "dup_grams",
+            None if dup_grams is None else dup_grams.select("g"),
+            DataFrame.distinct,
+        )
+    meta = {
+        "banding": list(banding),
+        "bucket_cap": policy["bucket_cap"],
+        "n_buckets": n_buckets,
+        "n_docs": n_docs,
+        # frozen so consumers can register the (possibly empty) tables
+        # with an explicit schema instead of file inference
+        "doc_id_type": docs.schema["doc_id"].dataType.simpleString(),
+    }
+    if prior_dir is not None:
+        meta["banding_stale"] = minhash_banding(n_docs) != banding
+    meta["scrubbed"] = bool(policy.get("scrubbed", False))
+    meta["dup_span_scrubbed"] = bool(policy.get("dup_span_scrubbed", False))
+    with open(os.path.join(out_dir, DEDUP_INDEX_META), "w") as f:
+        json.dump(meta, f)
+    return meta
 
 
 def build_dedup_index(
@@ -1019,61 +1187,43 @@ def build_dedup_index(
     dup_grams: "DataFrame | None" = None,
 ) -> dict:
     """Materialize the dedup index for an EXISTING (already
-    deduplicated) corpus -- the thing a recurring-crawl operator
-    builds once per corpus version and probes per batch:
+    deduplicated) corpus -- built once per corpus version, probed per
+    crawl batch; a build is :func:`_write_index` with no prior:
 
-    - ``<index_dir>/hashes``: (h = md5(text), exact_dup_of = min
-      doc_id) -- bucketed on ``h``.
-    - ``<index_dir>/bands``:  (ex_id, band_key) minhash band table
-      with the skew cap ALREADY applied (a flooded corpus bucket is
-      boilerplate the exact pass collapsed; capping at build time
-      means every probe skips it for free) -- bucketed on
-      ``band_key``.
-    - ``<index_dir>/index_meta.json``: the banding / cap / bucket
-      layout the probe side must reproduce -- signatures only match
-      if the incoming batch is banded with the SAME (b, r), so the
-      policy is frozen in the index, not re-derived per probe.
+    - ``hashes``: (h = md5(text), exact_dup_of = min doc_id),
+      bucketed on ``h``.
+    - ``bands``: (ex_id, band_key) minhash bands with the skew cap
+      ALREADY applied (a flooded corpus bucket is boilerplate the
+      exact pass collapsed, so every probe skips it for free), and
+      ``band_counts``: the pre-cap counts a roll re-caps on; both
+      bucketed on ``band_key``.
+    - ``index_meta.json``: the banding / cap / bucket layout the probe
+      must reproduce -- signatures only match if the batch is banded
+      with the SAME (b, r), so the policy is frozen in the index.
 
-    ``banding`` defaults to :func:`minhash_banding` on the indexed
-    corpus count.  The bucketed layout makes every later probe join
-    shuffle ONLY the incoming batch (the index side scans
-    pre-partitioned; plan-asserted in tests/test_incremental_index.py
-    ::test_band_probe_plan_is_asymmetric).  At 100 TB the index is a
-    fraction of corpus size (one 16-byte hash + b band keys per doc)
-    and is rebuilt only when the corpus version rolls.
+    ``banding`` defaults to :func:`minhash_banding` on the corpus
+    count.  The bucketed layout makes every probe join shuffle ONLY
+    the incoming batch (plan-asserted in tests/test_incremental_index
+    .py::test_band_probe_plan_is_asymmetric).  At 100 TB the index is
+    a fraction of corpus size (one 16-byte hash + b band keys per doc).
 
-    ``scrubbed=True`` records in the meta that ``docs.text`` is the
-    PII-SCRUBBED representation (``textstats.pii_scrub_text``):
-    :func:`probe_dedup_index` then scrubs the probe side before
-    hashing/banding, so a re-fetched PII-bearing doc still exact-
-    matches its corpus twin.  The flag is frozen in the index like the
-    banding -- representation is an index property, not a per-probe
-    choice.
+    ``scrubbed=True`` records that ``docs.text`` is PII-SCRUBBED
+    (``textstats.pii_scrub_text``): :func:`probe_dedup_index` then
+    scrubs the probe side before hashing/banding, so a re-fetched
+    PII-bearing doc still exact-matches its corpus twin.
 
     ``dup_span_scrubbed=True`` records that ``docs.text`` had cross-
-    doc duplicated spans SPLICED OUT (the pipeline's
-    ``--scrub-dup-spans`` stage).  Unlike the PII chain this transform
-    is corpus-dependent, so the index must carry the corpus's
-    "boilerplate list" -- ``dup_grams`` (the DataFrame[g] from
-    ``textstats.dup_grams_df`` over the PRE-scrub corpus) is REQUIRED
-    with the flag and lands as a fourth bucketed table
-    ``<index_dir>/dup_grams``.  :func:`probe_dedup_index` splices
-    incoming raw text against it (BEFORE any PII redaction, matching
-    the pipeline's stage order), so a re-fetched boilerplate-bearing
-    doc reproduces the indexed bytes and still exact-matches.
-    :func:`update_dedup_index` refuses mismatched representations
-    (the silent-degradation failure mode ADVICE r7 flagged for the
-    PII variant) and rolls the gram list forward by union -- a
-    monotone per-version list, like production boilerplate lists:
-    grams first duplicated only ACROSS versions enter the list at the
-    next version that sees them duplicated internally, never
-    retroactively."""
-    import json
-    import os
-
-
-    from ..sources import write_bucketed
-
+    doc duplicated spans SPLICED OUT (``--scrub-dup-spans``).  That
+    transform is corpus-dependent, so the corpus's boilerplate list
+    ``dup_grams`` (``textstats.dup_grams_df`` over the PRE-scrub
+    corpus) is REQUIRED with the flag and lands as a fourth bucketed
+    table: the probe splices raw text against it (before any PII
+    redaction, the pipeline's stage order) to reproduce the indexed
+    bytes.  :func:`update_dedup_index` refuses mismatched
+    representations and rolls the list forward by union -- a monotone
+    per-version list: grams first duplicated only ACROSS versions
+    enter it at the next version that sees them duplicated
+    internally, never retroactively."""
     if dup_span_scrubbed and dup_grams is None:
         raise ValueError(
             "dup_span_scrubbed=True requires dup_grams (the "
@@ -1081,85 +1231,14 @@ def build_dedup_index(
             " without the boilerplate list a probe can never replay "
             "the splice on raw re-fetched text"
         )
-    n_docs = docs.count()
-    if banding is None:
-        banding = minhash_banding(n_docs)
-    tag = _index_tag(index_dir)
-    hashes = (
-        docs.select(F.col("doc_id"), F.md5("text").alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("exact_dup_of"))
-    )
-    write_bucketed(
-        hashes, f"bpc_dedup_idx_h_{tag}", os.path.join(index_dir, "hashes"),
-        "h", n_buckets=n_buckets,
-    )
-    # pre-cap per-bucket counts are materialized alongside the capped
-    # band table: the cap must be re-applied on MERGED counts when the
-    # index is rolled forward (update_dedup_index), and a capped table
-    # alone has lost both the dropped rows and their counts.  persist
-    # the banded frame so the signature pass (the expensive part) runs
-    # once for both consumers.
-    banded = minhash_bands_df(docs.select("doc_id", "text"), banding)
-    banded.persist()
-    counts = banded.groupBy("band_key").agg(F.count("*").alias("bn"))
-    write_bucketed(
-        counts, f"bpc_dedup_idx_c_{tag}",
-        os.path.join(index_dir, "band_counts"), "band_key",
-        n_buckets=n_buckets,
-    )
-    ok = (
-        docs.sparkSession.table(f"bpc_dedup_idx_c_{tag}")
-        .filter(F.col("bn") <= bucket_cap)
-        .select("band_key")
-    )
-    bands = (
-        banded.join(ok, "band_key", "left_semi")
-        .select(F.col("doc_id").alias("ex_id"), "band_key")
-    )
-    write_bucketed(
-        bands, f"bpc_dedup_idx_b_{tag}", os.path.join(index_dir, "bands"),
-        "band_key", n_buckets=n_buckets,
-    )
-    banded.unpersist()
-    if dup_grams is not None:
-        write_bucketed(
-            dup_grams.select("g").distinct(),
-            f"bpc_dedup_idx_g_{tag}",
-            os.path.join(index_dir, "dup_grams"), "g",
-            n_buckets=n_buckets,
-        )
-    meta = {
-        "banding": list(banding),
+    policy = {
+        "banding": banding,
         "bucket_cap": bucket_cap,
         "n_buckets": n_buckets,
-        "n_docs": n_docs,
-        # frozen so consumers can register the (possibly empty) tables
-        # with an explicit schema instead of file inference
-        "doc_id_type": docs.schema["doc_id"].dataType.simpleString(),
-        "scrubbed": bool(scrubbed),
-        "dup_span_scrubbed": bool(dup_span_scrubbed),
+        "scrubbed": scrubbed,
+        "dup_span_scrubbed": dup_span_scrubbed,
     }
-    with open(os.path.join(index_dir, DEDUP_INDEX_META), "w") as f:
-        json.dump(meta, f)
-    return meta
-
-
-def _index_schemas(meta: dict) -> "dict[str, str] | dict[str, None]":
-    """DDL column lists for the three index tables, or Nones (fall
-    back to file inference) for indexes built before doc_id_type."""
-    dt = meta.get("doc_id_type")
-    if dt is None:
-        return {
-            "hashes": None, "bands": None, "band_counts": None,
-            "dup_grams": None,
-        }
-    return {
-        "hashes": f"`h` string, `exact_dup_of` {dt}",
-        "bands": f"`ex_id` {dt}, `band_key` string",
-        "band_counts": "`band_key` string, `bn` bigint",
-        "dup_grams": "`g` bigint",
-    }
+    return _write_index(docs, index_dir, policy, dup_grams)
 
 
 def update_dedup_index(
@@ -1172,21 +1251,10 @@ def update_dedup_index(
 ) -> dict:
     """Roll the corpus-version index forward: prior index + the batch
     of NEWLY KEPT docs -> the next version's index, WITHOUT re-signing
-    the existing corpus.  Signatures (the expensive text pass) are
-    computed only for the batch; the prior index contributes its
-    materialized hash/band/count tables, so the update costs
-    O(batch text + index size), never O(corpus text).
-
-    Semantics are exactly a fresh :func:`build_dedup_index` over the
-    union corpus at the FROZEN banding (equivalence is test-asserted):
-
-    - hashes: union + groupBy min -- the global min doc_id per hash.
-    - band cap: re-applied on MERGED per-bucket counts (prior pre-cap
-      counts + batch counts).  A bucket that crosses the cap only
-      after the merge loses its PRIOR rows too -- which is why the
-      build materializes ``band_counts``; the capped band table alone
-      has lost both the dropped rows and their counts.  Indexes built
-      before band_counts existed must be rebuilt once.
+    the existing corpus -- exactly a fresh :func:`build_dedup_index`
+    over the union corpus at the FROZEN banding (both are
+    :func:`_write_index`; equivalence is test-asserted).  Indexes
+    built before band_counts existed must be rebuilt once.
 
     Banding stays frozen at the prior version's (b, r) -- probe
     signatures only match the index they were banded for.  The
@@ -1195,219 +1263,73 @@ def update_dedup_index(
     rebuild at the next version roll (an epoch event, not a per-batch
     one; rehearsed at the 10k boundary in BASELINE.md r8).
 
-    ``scrubbed`` asserts the representation of ``new_docs.text``
-    against the prior index's frozen flag: pass the current run's
-    scrub setting and a mismatch raises instead of silently merging
-    raw hashes into a scrubbed index (or vice versa).  ``None`` skips
-    the check (caller guarantees consistency)."""
-    import json
-    import os
-
-    from ..sources import register_bucketed, write_bucketed
-
-    with open(os.path.join(prior_dir, DEDUP_INDEX_META)) as f:
-        prior = json.load(f)
+    ``scrubbed`` / ``dup_span_scrubbed`` assert the representation of
+    ``new_docs.text`` against the prior index's frozen flags: pass the
+    current run's scrub settings and a mismatch raises instead of
+    silently merging raw hashes into a scrubbed index (or vice versa).
+    ``None`` skips the check (caller guarantees consistency)."""
+    prior = read_index_meta(prior_dir)
     if not os.path.isdir(os.path.join(prior_dir, "band_counts")):
         raise ValueError(
             f"{prior_dir} has no band_counts table (built before "
             "update support) -- rebuild it once with build_dedup_index"
         )
-    banding = tuple(prior["banding"])
-    cap, n_buckets = prior["bucket_cap"], prior["n_buckets"]
-    if scrubbed is not None and bool(scrubbed) != prior.get(
-        "scrubbed", False
+    for flag, given in (
+        ("scrubbed", scrubbed), ("dup_span_scrubbed", dup_span_scrubbed)
     ):
-        raise ValueError(
-            f"text representation mismatch: index at {prior_dir} was "
-            f"built scrubbed={prior.get('scrubbed', False)} but this "
-            f"run supplies scrubbed={bool(scrubbed)} docs -- mixing "
-            "representations silently breaks exact-hash dedup"
-        )
-    if dup_span_scrubbed is not None and bool(
-        dup_span_scrubbed
-    ) != prior.get("dup_span_scrubbed", False):
-        raise ValueError(
-            f"text representation mismatch: index at {prior_dir} was "
-            f"built dup_span_scrubbed="
-            f"{prior.get('dup_span_scrubbed', False)} but this run "
-            f"supplies dup_span_scrubbed={bool(dup_span_scrubbed)} "
-            "docs -- mixing representations silently breaks "
-            "exact-hash dedup"
-        )
-    spark = new_docs.sparkSession
-    tag_p, tag_o = _index_tag(prior_dir), _index_tag(out_dir)
-    if tag_p == tag_o:
-        # in-place update would overwrite tables while scanning them
-        raise ValueError("out_dir must differ from prior_dir")
-
-    schemas = _index_schemas(prior)
-    batch_dt = new_docs.schema["doc_id"].dataType.simpleString()
-    if prior.get("doc_id_type") not in (None, batch_dt):
-        raise ValueError(
-            f"batch doc_id type {batch_dt} != index "
-            f"{prior['doc_id_type']}"
-        )
-    prior_h = register_bucketed(
-        spark, f"bpc_dedup_idx_h_{tag_p}",
-        os.path.join(prior_dir, "hashes"), "h", n_buckets=n_buckets,
-        schema=schemas["hashes"],
-    )
-    new_h = new_docs.select(
-        F.md5("text").alias("h"), F.col("doc_id").alias("exact_dup_of")
-    )
-    hashes = (
-        prior_h.unionByName(new_h)
-        .groupBy("h")
-        .agg(F.min("exact_dup_of").alias("exact_dup_of"))
-    )
-    write_bucketed(
-        hashes, f"bpc_dedup_idx_h_{tag_o}", os.path.join(out_dir, "hashes"),
-        "h", n_buckets=n_buckets,
-    )
-
-    banded = minhash_bands_df(new_docs.select("doc_id", "text"), banding)
-    banded.persist()
-    prior_c = register_bucketed(
-        spark, f"bpc_dedup_idx_c_{tag_p}",
-        os.path.join(prior_dir, "band_counts"), "band_key",
-        n_buckets=n_buckets, schema=schemas["band_counts"],
-    )
-    counts = (
-        prior_c.unionByName(
-            banded.groupBy("band_key").agg(F.count("*").alias("bn"))
-        )
-        .groupBy("band_key")
-        .agg(F.sum("bn").cast("bigint").alias("bn"))
-    )
-    write_bucketed(
-        counts, f"bpc_dedup_idx_c_{tag_o}",
-        os.path.join(out_dir, "band_counts"), "band_key",
-        n_buckets=n_buckets,
-    )
-    ok = (
-        spark.table(f"bpc_dedup_idx_c_{tag_o}")
-        .filter(F.col("bn") <= cap)
-        .select("band_key")
-    )
-    prior_b = register_bucketed(
-        spark, f"bpc_dedup_idx_b_{tag_p}",
-        os.path.join(prior_dir, "bands"), "band_key", n_buckets=n_buckets,
-        schema=schemas["bands"],
-    )
-    bands = (
-        prior_b.unionByName(
-            banded.select(F.col("doc_id").alias("ex_id"), "band_key")
-        )
-        .join(ok, "band_key", "left_semi")
-        .select("ex_id", "band_key")
-    )
-    write_bucketed(
-        bands, f"bpc_dedup_idx_b_{tag_o}", os.path.join(out_dir, "bands"),
-        "band_key", n_buckets=n_buckets,
-    )
-    banded.unpersist()
-
+        have = prior.get(flag, False)
+        if given is not None and bool(given) != have:
+            raise ValueError(
+                f"text representation mismatch: index at {prior_dir} was "
+                f"built {flag}={have} but this run supplies "
+                f"{flag}={bool(given)} docs -- mixing representations "
+                "silently breaks exact-hash dedup"
+            )
     if new_dup_grams is not None and not prior.get("dup_span_scrubbed"):
         raise ValueError(
             f"index at {prior_dir} was not built dup_span_scrubbed; "
             "passing new_dup_grams would silently change the text "
             "representation mid-roll"
         )
-    if prior.get("dup_span_scrubbed"):
-        gdir_p = os.path.join(prior_dir, "dup_grams")
-        if not os.path.isdir(gdir_p):
-            raise ValueError(
-                f"{prior_dir} records dup_span_scrubbed but has no "
-                "dup_grams table -- rebuild it once with "
-                "build_dedup_index(..., dup_grams=...)"
-            )
-        prior_g = register_bucketed(
-            spark, f"bpc_dedup_idx_g_{tag_p}", gdir_p, "g",
-            n_buckets=n_buckets, schema=schemas["dup_grams"],
+    if _index_tag(prior_dir) == _index_tag(out_dir):
+        # in-place update would overwrite tables while scanning them
+        raise ValueError("out_dir must differ from prior_dir")
+    batch_dt = new_docs.schema["doc_id"].dataType.simpleString()
+    if batch_dt != prior["doc_id_type"]:
+        raise ValueError(
+            f"batch doc_id type {batch_dt} != index "
+            f"{prior['doc_id_type']}"
         )
-        # monotone roll: the next version's boilerplate list is the
-        # prior list UNION the batch's own duplicated grams
-        out_g = (
-            prior_g
-            if new_dup_grams is None
-            else prior_g.unionByName(
-                new_dup_grams.select("g")
-            ).distinct()
-        )
-        write_bucketed(
-            out_g, f"bpc_dedup_idx_g_{tag_o}",
-            os.path.join(out_dir, "dup_grams"), "g",
-            n_buckets=n_buckets,
-        )
-
-    n_docs = prior.get("n_docs", 0) + new_docs.count()
-    meta = {
-        "banding": list(banding),
-        "bucket_cap": cap,
-        "n_buckets": n_buckets,
-        "n_docs": n_docs,
-        "doc_id_type": batch_dt,
-        "banding_stale": minhash_banding(n_docs) != banding,
-        "scrubbed": prior.get("scrubbed", False),
-        "dup_span_scrubbed": prior.get("dup_span_scrubbed", False),
-    }
-    with open(os.path.join(out_dir, DEDUP_INDEX_META), "w") as f:
-        json.dump(meta, f)
-    return meta
+    return _write_index(new_docs, out_dir, prior, new_dup_grams, prior_dir)
 
 
 def probe_dedup_index(
     spark: SparkSession, new_docs: DataFrame, index_dir: str
 ) -> DataFrame:
     """Dedup an incoming batch against a :func:`build_dedup_index`
-    index: one row per incoming doc with ``exact_dup_of`` /
-    ``near_dup_of`` (minimum existing doc_id matched, -1 if none) and
-    ``keep`` (both -1) -- the same output contract as the
-    ``dedup_incremental`` driver query, produced by two joins that are
+    index: the ``dedup_incremental`` driver query's :func:`_probe`
+    rows (``exact_dup_of`` / ``near_dup_of``, -1 if none; ``keep``),
     linear in batch + index size.  Intra-batch duplicates are NOT
     resolved here (the standard ops' job on the kept batch).
 
-    Both probes join against BUCKETED index tables re-registered via
-    :func:`..sources.register_bucketed`: only the incoming side
-    shuffles (asymmetric join -- the index side's exchange was paid
-    once at build; plan-asserted in tests/test_incremental_index.py
+    Both joins scan BUCKETED index tables, so only the incoming side
+    shuffles (plan-asserted in tests/test_incremental_index.py
     ::test_band_probe_plan_is_asymmetric).
 
-    If the index meta records ``scrubbed: true`` the probe text is
-    passed through the PII redaction chain before hashing/banding --
-    the index holds hashes of the SCRUBBED representation, so probing
-    raw re-fetched text would miss every PII-bearing exact dup.
-    ``dup_span_scrubbed: true`` likewise splices the probe text
-    against the index's frozen ``dup_grams`` boilerplate list FIRST
-    (the pipeline scrubs dup spans before PII, and the gram list was
-    computed on pre-PII text -- replay must match that order)."""
-    import json
-    import os
-
-    from ..sources import register_bucketed
-
-    with open(os.path.join(index_dir, DEDUP_INDEX_META)) as f:
-        meta = json.load(f)
-    tag = _index_tag(index_dir)
-    schemas = _index_schemas(meta)
+    ``scrubbed: true`` in the meta passes the probe text through the
+    PII redaction chain before hashing/banding (the index holds
+    hashes of the SCRUBBED text).  ``dup_span_scrubbed: true`` first
+    splices it against the index's frozen ``dup_grams`` list (the
+    pipeline scrubs dup spans before PII, and the list was computed
+    on pre-PII text -- replay must match that order)."""
+    meta = read_index_meta(index_dir)
     if meta.get("dup_span_scrubbed"):
-        gdir = os.path.join(index_dir, "dup_grams")
-        if not os.path.isdir(gdir):
-            raise ValueError(
-                f"index at {index_dir} records dup_span_scrubbed but "
-                "has no dup_grams table -- rebuild it once with "
-                "build_dedup_index(..., dup_grams=...)"
-            )
         from .textstats import dup_span_scrub_df
 
-        grams = register_bucketed(
-            spark, f"bpc_dedup_idx_g_{tag}", gdir, "g",
-            n_buckets=meta["n_buckets"], schema=schemas["dup_grams"],
-        )
         new_docs = dup_span_scrub_df(
             new_docs.select("doc_id", "text"),
             normal_form=False,
-            grams=grams,
+            grams=_index_table(spark, index_dir, meta, "dup_grams"),
         ).select("doc_id", F.col("scrubbed_text").alias("text"))
     if meta.get("scrubbed"):
         from .textstats import pii_scrub_text
@@ -1415,39 +1337,11 @@ def probe_dedup_index(
         new_docs = new_docs.withColumn(
             "text", pii_scrub_text(F.col("text"))
         )
-    exist_h = register_bucketed(
-        spark, f"bpc_dedup_idx_h_{tag}", os.path.join(index_dir, "hashes"),
-        "h", n_buckets=meta["n_buckets"], schema=schemas["hashes"],
-    )
-    ex_bands = register_bucketed(
-        spark, f"bpc_dedup_idx_b_{tag}", os.path.join(index_dir, "bands"),
-        "band_key", n_buckets=meta["n_buckets"], schema=schemas["bands"],
-    )
-    exact = (
-        new_docs.select("doc_id", F.md5("text").alias("h"))
-        .join(exist_h, "h", "left")
-        .select("doc_id", "exact_dup_of")
-    )
-    near = (
-        minhash_bands_df(
-            new_docs.select("doc_id", "text"), tuple(meta["banding"])
-        )
-        .join(ex_bands, "band_key")
-        .groupBy("doc_id")
-        .agg(F.min("ex_id").alias("near_dup_of"))
-    )
-    # sentinel typed to the caller's doc_id dtype: pipeline corpora use
-    # STRING doc-XXXX ids (the r5 lesson -- every dedup op must work on
-    # BOTH id types), driver corpora BIGINT; a bare int lit would force
-    # a string->bigint cast that throws on the first real id
-    sentinel = F.lit(-1).cast(new_docs.schema["doc_id"].dataType)
-    return exact.join(near, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("exact_dup_of", sentinel).alias("exact_dup_of"),
-        F.coalesce("near_dup_of", sentinel).alias("near_dup_of"),
-        (
-            F.col("exact_dup_of").isNull() & F.col("near_dup_of").isNull()
-        ).alias("keep"),
+    return _probe(
+        new_docs,
+        _index_table(spark, index_dir, meta, "hashes"),
+        _index_table(spark, index_dir, meta, "bands"),
+        tuple(meta["banding"]),
     )
 
 

@@ -797,12 +797,7 @@ def dup_span_frac_df(
         .alias("n_windows"),
     )
     ex = _gram_rows_df(base, w)
-    dup = (
-        ex.groupBy("g")
-        .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
-        .filter(F.col("mn") != F.col("mx"))
-        .select("g")
-    )
+    dup = _dup_grams(ex)
     win = Window.partitionBy("doc_id").orderBy("pos")
     agg = (
         ex.join(dup, "g")
@@ -919,9 +914,15 @@ def dup_grams_df(
     probes can replay the corpus's splice on raw re-fetched text."""
     w = w or DUP_SPAN_W
     base = df.select("doc_id", F.col(text_col).alias("text"))
+    return _dup_grams(_gram_rows_df(base, w))
+
+
+def _dup_grams(ex: DataFrame) -> DataFrame:
+    """Gram rows (doc_id, g, ...) -> DataFrame[g]: the grams that
+    occur in >= 2 distinct docs.  Map-side-combinable min/max is the
+    distinct-docs test, and the groupBy makes the result distinct."""
     return (
-        _gram_rows_df(base, w)
-        .groupBy("g")
+        ex.groupBy("g")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
         .filter(F.col("mn") != F.col("mx"))
         .select("g")
@@ -1051,12 +1052,7 @@ def dup_span_scrub_df(
         # already distinct by construction (groupBy g) -- no extra
         # exchange; an EXTERNAL frame gets an explicit distinct so a
         # caller passing a multi-version union can't double-collect
-        gsel = (
-            ex.groupBy("g")
-            .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
-            .filter(F.col("mn") != F.col("mx"))
-            .select("g")
-        )
+        gsel = _dup_grams(ex)
     else:
         gsel = grams.select("g").distinct()
     dpos = (

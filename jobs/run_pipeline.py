@@ -84,8 +84,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--extractor", default="ArticleExtractor")
     ap.add_argument("--buckets", type=int, default=16)
-    ap.add_argument("--min-tokens", type=int, default=30)
-    ap.add_argument("--max-dup-bigram", type=float, default=0.9)
     ap.add_argument(
         "--drop-bottom-quality-pct", type=float, default=None,
         help="data-driven gate: drop the bottom X%% of docs by "
@@ -204,11 +202,7 @@ def main() -> None:
     # stages 2-3: the SHARED feature/gate operator (same code the
     # driver-contract pretrain_pipeline query runs), keep-set filter
     extracted = spark.read.parquet(os.path.join(extract_dir, "data"))
-    features = content_features(
-        extracted,
-        min_tokens=args.min_tokens,
-        max_dup_bigram=args.max_dup_bigram,
-    )
+    features = content_features(extracted)
 
     # stage 2a (optional): incremental dedup against an EXISTING
     # corpus's materialized index -- the recurring-crawl shape: drop
@@ -352,16 +346,17 @@ def main() -> None:
         # index will record.
         all_grams = dup_grams_df(training.select("doc_id", "text"))
         if args.incremental:
-            import json as _json
+            from boilerpipe_coffee_spark.operators.dedup import (
+                read_index_meta,
+            )
 
             prior_idx = os.path.join(args.incremental, "dedup_index")
-            with open(os.path.join(prior_idx, "index_meta.json")) as f:
-                if not _json.load(f).get("dup_span_scrubbed"):
-                    raise ValueError(
-                        f"--scrub-dup-spans with --incremental needs a "
-                        f"prior index built with the same flag; "
-                        f"{prior_idx} is not dup_span_scrubbed"
-                    )
+            if not read_index_meta(prior_idx).get("dup_span_scrubbed"):
+                raise ValueError(
+                    f"--scrub-dup-spans with --incremental needs a "
+                    f"prior index built with the same flag; "
+                    f"{prior_idx} is not dup_span_scrubbed"
+                )
             # explicit schema: an index over a corpus with NO
             # surviving cross-doc spans has an EMPTY (file-less)
             # dup_grams table, which schema inference cannot read

@@ -790,3 +790,76 @@ def test_chained_lifecycle_keep_set_and_roll(spark, tmp_path_factory):
     for sub in ("hashes", "bands", "band_counts"):
         assert roll[f"{sub}_equal"], roll
     assert roll["scrubbed"] is True
+
+
+# ------------------------------------------------------------------ #
+# one index writer, one probe join                                     #
+# ------------------------------------------------------------------ #
+
+
+def test_roll_from_empty_prior_equals_fresh_build(spark, tmp_path_factory):
+    """A build is a roll from no prior, so rolling a batch onto an
+    index built over ZERO docs must equal a fresh build of the batch
+    at the same banding, table by table."""
+    from boilerpipe_coffee_spark.operators.dedup import update_dedup_index
+
+    base = str(tmp_path_factory.mktemp("dix_empty_prior"))
+    docs = spark.read.parquet(SF + "/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    v0, v1, fresh = (os.path.join(base, d) for d in ("v0", "v1", "fresh"))
+    meta0 = build_dedup_index(docs.limit(0), v0)
+    assert meta0["n_docs"] == 0
+    meta1 = update_dedup_index(docs, v0, v1)
+    metaf = build_dedup_index(docs, fresh, banding=tuple(meta0["banding"]))
+    assert meta1["n_docs"] == metaf["n_docs"] == docs.count()
+    assert meta1["banding"] == metaf["banding"]
+    rows = {}
+    for sub in ("hashes", "bands", "band_counts"):
+        got, want = (
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(os.path.join(d, sub)).collect()
+            )
+            for d in (v1, fresh)
+        )
+        assert got == want, sub
+        rows[sub] = len(got)
+    # the comparison is not vacuous at this scale
+    assert rows["bands"] == 2000 and rows["band_counts"] == 1906, rows
+
+
+def test_probe_rejects_index_without_doc_id_type(spark, tmp_path_factory):
+    """An index whose meta predates ``doc_id_type`` (and band_counts)
+    is refused by the probe with the same "rebuild it once" error the
+    roll gives, instead of registering its tables by file inference."""
+    import pytest
+
+    idx = str(tmp_path_factory.mktemp("dix_old_meta"))
+    docs = spark.createDataFrame(
+        [("d1", "an indexed document body")], "doc_id string, text string"
+    )
+    build_dedup_index(docs, idx)
+    path = os.path.join(idx, "index_meta.json")
+    with open(path) as f:
+        meta = json.load(f)
+    del meta["doc_id_type"]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild it once"):
+        probe_dedup_index(spark, docs, idx)
+
+
+def test_one_index_writer_and_one_probe_join():
+    """dedup.py writes and registers index tables in one place each,
+    and spells the probe's sentinel/keep projection once: a second
+    copy of the writer or the probe join fails here."""
+    import inspect
+
+    from boilerpipe_coffee_spark.operators import dedup
+
+    src = inspect.getsource(dedup)
+    assert src.count("write_bucketed(") == 1
+    assert src.count("register_bucketed(") == 1
+    assert src.count('F.coalesce("exact_dup_of"') == 1
+    assert src.count('.agg(F.min("ex_id")') == 1

@@ -399,14 +399,13 @@ def check_index_roll(
     build over EVERY version's keepers so far (the whole corpus, not
     just the last two batches) at the frozen banding."""
     from boilerpipe_coffee_spark.operators.dedup import (
-        DEDUP_INDEX_META, build_dedup_index,
+        build_dedup_index, read_index_meta,
     )
 
     def read(o: str, sub: str):
         return spark.read.parquet(os.path.join(o, sub))
 
-    with open(os.path.join(all_outs[0], "dedup_index", DEDUP_INDEX_META)) as f:
-        v1_meta = json.load(f)
+    v1_meta = read_index_meta(os.path.join(all_outs[0], "dedup_index"))
     union_docs = functools.reduce(
         lambda a, b: a.unionByName(b),
         [read(o, "training").select("doc_id", "text") for o in all_outs],
@@ -428,8 +427,7 @@ def check_index_roll(
         got, want = table(rolled, sub), table(fresh_dir, sub)
         rec[f"{sub}_equal"] = got == want
         rec[f"{sub}_rows"] = got[0]
-    with open(os.path.join(rolled, DEDUP_INDEX_META)) as f:
-        v2_meta = json.load(f)
+    v2_meta = read_index_meta(rolled)
     rec["n_docs_v2"] = v2_meta["n_docs"]
     rec["banding_stale"] = v2_meta["banding_stale"]
     rec["scrubbed"] = v2_meta.get("scrubbed", False)
