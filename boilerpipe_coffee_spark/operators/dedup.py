@@ -1475,55 +1475,89 @@ def resolve_components(
     docs with a ~1% near-dup rate that is a 100x smaller shuffle per
     round).  Rounds = component diameter; duplicate clusters are
     shallow (near-clique), so this converges in 2-3 rounds.
-    ``localCheckpoint`` truncates the growing plan per round.  If a
-    long-chain graph exhausts ``max_iters`` (diameter > rounds), the
-    run FALLS BACK to :func:`_star_components` -- alternating
-    large-star/small-star, O(log^2 n) rounds independent of diameter --
-    instead of raising, so pathological chains cost extra rounds,
-    never a wrong answer."""
+
+    Round shape: the state is one row per node, (doc_id, cluster_id,
+    nbrs), built from the edges by one groupBy that also applies the
+    first hop (cluster_id = least(doc_id, array_min(nbrs))).  Each
+    further round is ONE exchange: every node sends its label to each
+    neighbour plus a self-message carrying ``nbrs`` and its old label,
+    and one groupBy on the receiver takes the minimum.  Convergence:
+    the new label is least(old, received), so the round moved nodes
+    exactly when sum(new < old) > 0 -- counted by ``observe`` inside
+    the round's own checkpoint action, not by a second job (any label
+    type).  Each round's checkpoint truncates the growing plan.  If a
+    long-chain graph exhausts ``max_iters`` hops (diameter >
+    max_iters), the run FALLS BACK to :func:`_star_components` --
+    alternating large-star/small-star, O(log^2 n) rounds independent
+    of diameter -- instead of raising, so pathological chains cost
+    extra rounds, never a wrong answer."""
+    from pyspark.sql import Observation
+
     # both orientations from ONE pass over pairs (a union of two
     # selects would run the whole pairs plan once per branch)
     both = F.array(
         F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
     )
-    edges = pairs.select(F.explode(both).alias("e")).select("e.src", "e.dst")
-    edges = _ckpt(edges, checkpoint_dir)
-    labels = _ckpt(
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id")),
+    state = _ckpt(
+        pairs.select(F.explode(both).alias("e"))
+        .groupBy(F.col("e.src").alias("doc_id"))
+        .agg(F.collect_set("e.dst").alias("nbrs"))
+        .select(
+            "doc_id",
+            F.least("doc_id", F.array_min("nbrs")).alias("cluster_id"),
+            "nbrs",
+        ),
         checkpoint_dir,
     )
-    # convergence: the new label is least(old, nbr_min), so a label
-    # changed EXACTLY when nbr_min < old -- carried as ``moved`` through
-    # the round's checkpoint and counted on the materialized frame (one
-    # scan, no new-vs-old join, any label type)
-    moved = F.coalesce(F.col("nbr_min") < F.col("cluster_id"), F.lit(False))
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(labels, edges.src == labels.doc_id)
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = _ckpt(
-            labels.join(nbr, labels.doc_id == nbr.dst, "left").select(
-                "doc_id",
-                F.least("cluster_id", "nbr_min").alias("cluster_id"),
-                moved.alias("moved"),
-            ),
+    # a node's label to each neighbour, plus a self-message carrying
+    # its neighbour list and old label
+    to_nbrs = F.transform(
+        "nbrs",
+        lambda n: F.struct(
+            n.alias("doc_id"),
+            F.col("cluster_id").alias("lbl"),
+            F.lit(None).alias("nbrs"),
+            F.lit(None).alias("old"),
+        ),
+    )
+    to_self = F.struct(
+        "doc_id",
+        F.col("cluster_id").alias("lbl"),
+        "nbrs",
+        F.col("cluster_id").alias("old"),
+    )
+    messages = F.explode(F.concat(to_nbrs, F.array(to_self))).alias("m")
+    # the first hop is already in the state, so max_iters - 1 rounds
+    # remain -- the same hop budget as one join round per hop
+    for _ in range(max_iters - 1):
+        moved = Observation()
+        state = _ckpt(
+            state.select(messages)
+            .groupBy("m.doc_id")
+            .agg(
+                F.min("m.lbl").alias("cluster_id"),
+                F.max("m.nbrs").alias("nbrs"),
+                F.max("m.old").alias("old"),
+            )
+            .observe(
+                moved,
+                F.sum(
+                    (F.col("cluster_id") < F.col("old")).cast("long")
+                ).alias("n"),
+            )
+            .select("doc_id", "cluster_id", "nbrs"),
             checkpoint_dir,
         )
-        labels = new_labels.select("doc_id", "cluster_id")
-        if new_labels.filter("moved").count() == 0:
+        if not moved.get["n"]:
             break
     else:
         # diameter > max_iters: switch to the diameter-independent
         # star algorithm (silent wrong labels would diverge from the
         # exact recursive-CTE oracle undetectably; a slower correct
         # path is the right degradation)
-        labels = _star_components(pairs, checkpoint_dir=checkpoint_dir)
-    return labels
+        return _star_components(pairs, checkpoint_dir=checkpoint_dir)
+    return state.select("doc_id", "cluster_id")
 
 
 def dedup_clusters(spark, sf_dir, max_iters: int = 20):

@@ -8,7 +8,8 @@ per-partition lineage + metrics.  Strategy (SURVEY.md section 4):
   buckets; all pending buckets run in ONE scan of the input (the hash
   predicate cannot push down, so per-bucket scans would multiply reads
   by n_buckets) and land via dynamic partition overwrite, one
-  ``bucket=N`` directory each.
+  ``bucket=N`` directory each, about one file per bucket (see
+  :func:`run_partitioned`).
 - commit unit is still the bucket: one metrics row ``(partition_id,
   docs_in, docs_out, spans_out, errors, wall_ms, extractor)`` per
   bucket, written only AFTER its data is fully on disk (write-ahead
@@ -87,6 +88,13 @@ def run_partitioned(
     as before, at O(1) input scans.  (On Iceberg the write is a single
     snapshot append instead; the metrics protocol is unchanged.)
 
+    File layout: documents are extracted on the map side of one
+    ``rebalance(bucket)`` exchange, and AQE coalesces small buckets
+    and splits large ones into writers of about the advisory size, so
+    a pass writes about one file per bucket.  Written straight from the
+    scan, each task would open a writer per bucket it holds -- input
+    tasks x buckets small files, each a later one-file scan task.
+
     Lineage: ``docs_in`` is counted from the INPUT (one column-pruned
     scan of doc_id), independently of ``docs_out`` from the written
     output, so input/output divergence is detectable.  ``wall_ms`` is
@@ -135,7 +143,8 @@ def run_partitioned(
     if total_in:
         run_extract = extract_balanced if balanced else extract
         extracted = run_extract(part.drop("bucket"), extractor)
-        result = with_bucket(extracted)
+        # one writer per bucket, not per (scan task, bucket)
+        result = with_bucket(extracted).hint("rebalance", F.col("bucket"))
         (
             result.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

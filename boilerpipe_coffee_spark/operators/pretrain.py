@@ -191,8 +191,12 @@ def near_dup_keep(
     # checkpoint_dir: reliable lineage cuts for the component loop on a
     # real cluster (survives executor loss); local default stays fast
     labels = resolve_components(pairs, max_iters, checkpoint_dir)
+    # a sort-merge join, never a broadcast of the (checkpointed, hence
+    # small-looking) labels: the output then stays hash-partitioned by
+    # doc_id, so a doc_id-bucketed write of it opens one writer per
+    # bucket instead of one per (features partition, bucket)
     return (
-        features.join(labels, "doc_id", "left")
+        features.join(labels.hint("merge"), "doc_id", "left")
         .withColumn(
             "cluster_id",
             F.when(

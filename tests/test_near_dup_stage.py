@@ -68,6 +68,33 @@ def test_near_dup_keepers(spark):
     assert got["doc-c2"][1] is None and got["doc-d"][1] is None
 
 
+def test_near_dup_keep_output_hash_partitioned_by_doc_id(spark):
+    """The labels join must stay a sort-merge join on doc_id.  Over
+    persisted features (as the pipeline job and perfbench run it) the
+    checkpointed labels look small, and a broadcast of them would leave
+    the output partitioned by content_features' content_hash; the
+    doc_id-bucketed training write would then open a writer per
+    (partition, bucket) instead of one per bucket."""
+    rows = [
+        _doc("doc-a1", BASE + "ending alpha variant"),
+        _doc("doc-a2", BASE + "ending beta variant"),
+        _doc("doc-c1", BASE2 + "exact twin tail"),
+    ]
+    features = content_features(
+        spark.createDataFrame(rows, OUTPUT_SCHEMA)
+    ).persist()
+    try:
+        features.count()
+        out = near_dup_keep(features)
+        # AdaptiveSparkPlan reports UnknownPartitioning; its initial
+        # plan carries the planned one
+        plan = out._jdf.queryExecution().executedPlan().initialPlan()
+        part = plan.outputPartitioning().toString()
+        assert part.startswith("hashpartitioning(doc_id#"), part
+    finally:
+        features.unpersist()
+
+
 def test_near_dup_keep_final_subset_of_keep(spark):
     """On the organic flagship corpus keep_final implies keep and the
     cluster keeper is the cluster minimum."""

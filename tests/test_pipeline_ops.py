@@ -99,6 +99,32 @@ def test_run_partitioned_scans_input_O1_times(spark, tmp_path_factory):
     assert acc.value <= 2 * n, f"input rows processed {acc.value} > {2 * n}"
 
 
+def test_run_partitioned_writes_one_file_per_bucket(spark, tmp_path_factory):
+    """4 input partitions x 8 buckets: the extracted rows are clustered
+    by bucket before the write, so the pass lands at most one file per
+    bucket (one writer per (input task, bucket) would write up to 32),
+    and the rows are exactly plain extraction's."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    out_dir = str(tmp_path_factory.mktemp("ppl_files"))
+    docs = synth_interleaved(spark, 80, seed=13, partitions=4)
+    s = run_partitioned(spark, docs, out_dir, n_buckets=8)
+    assert s["docs_out"] == 80
+    files = glob.glob(out_dir + "/data/bucket=*/*.parquet")
+    assert 0 < len(files) <= 8, files
+
+    def digest(df):
+        cols = ["doc_id", "title", "spans", "error"]
+        return tuple(
+            df.select(F.count("*"), F.bit_xor(F.xxhash64(*cols))).first()
+        )
+
+    written = spark.read.parquet(out_dir + "/data").drop("bucket")
+    assert digest(written) == digest(extract(docs, "ArticleExtractor"))
+
+
 def test_multimodal_decode(spark, t1_df):
     import hashlib
 
