@@ -107,15 +107,6 @@ def split_word_count(text: str) -> int:
     return len(RE_NON_WORD_RUN.split(text))
 
 
-def js_truthy(v) -> bool:
-    """JS truthiness for the value kinds the reference manipulates."""
-    if v is None:
-        return False
-    if isinstance(v, float) and math.isnan(v):
-        return False
-    return bool(v)
-
-
 def js_div(a: float, b: float) -> float:
     """JS division: x/0 -> +-Infinity, 0/0 -> NaN, NaN propagates."""
     if math.isnan(a) or math.isnan(b):
@@ -126,7 +117,3 @@ def js_div(a: float, b: float) -> float:
         return math.inf if a > 0 else -math.inf
     return a / b
 
-
-def nn(v) -> float:
-    """Coerce the reference's undefined/null numeric slots to NaN."""
-    return NAN if v is None else v

@@ -86,8 +86,10 @@ def quality_gate(
     features: DataFrame, drop_bottom_pct: float
 ) -> tuple[DataFrame, float]:
     """Data-driven quality gate: drop the bottom ``drop_bottom_pct``
-    percent of documents by composite quality score, with the
-    threshold picked by the distributed histogram sketch
+    percent of documents by composite quality score -- the one Arrow
+    kernel and Column builder of the ``quality_score`` driver query
+    (:func:`..operators.textstats.quality_expr`) -- with the threshold
+    picked by the distributed histogram sketch
     (:func:`..operators.textstats.quality_bin_threshold` -- a
     <=1000-key shuffle at any corpus size, no global sort).
 
@@ -98,11 +100,15 @@ def quality_gate(
     gate.  Ties AT the threshold bin are kept, so at most the
     requested fraction is dropped (deterministic -- no row-order
     dependence)."""
-    from .textstats import quality_bin, quality_bin_threshold, quality_expr
+    from . import textstats as ts
 
-    scored = features.withColumn("quality", quality_expr())
-    thr_bin = quality_bin_threshold(scored, drop_bottom_pct / 100.0)
-    passes = quality_bin("quality") >= F.lit(thr_bin)
+    scored = (
+        ts.with_quality_counts(features)
+        .withColumn("quality", ts.quality_expr(F.col("_qc"))["quality"])
+        .drop("_qc")
+    )
+    thr_bin = ts.quality_bin_threshold(scored, drop_bottom_pct / 100.0)
+    passes = ts.quality_bin("quality") >= F.lit(thr_bin)
     gated = (
         scored.withColumn("passes_quality", passes)
         .withColumn(
@@ -110,9 +116,7 @@ def quality_gate(
         )
         .withColumn("keep", F.col("is_canonical") & F.col("passes_gates"))
     )
-    from .textstats import N_QBINS
-
-    return gated, thr_bin / float(N_QBINS)
+    return gated, thr_bin / float(ts.N_QBINS)
 
 
 def emit_chunks(training: DataFrame, context_len: int | None = None) -> DataFrame:

@@ -6,6 +6,8 @@ bit-identical md5-derived hashing.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -72,70 +74,92 @@ FROM h ORDER BY doc_id
 """
 
 
-def _stop_ratio_expr():
-    toks = F.expr(_TOKENS)
-    return F.round(
-        F.size(
-            F.filter(
-                toks,
-                lambda x: F.array_contains(
-                    F.expr(_arr_lit(STOPWORDS["en"])), x
-                ),
+def _quality_counts_udf():
+    """The per-document quality kernel: one Arrow pass over ``text``
+    emitting EXACT INTEGERS -- token count, summed token length,
+    stopword hits, text length, punct-stripped length (null text ->
+    nulls).  Built per call: a DDL-typed ``pandas_udf`` needs a live
+    session to parse its return type."""
+    import re
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    stop = frozenset(STOPWORDS["en"])
+    # ASCII \s == Java's \s (unicode \s also matches \x1c-\x1f)
+    strip_punct = re.compile(r"[^a-zA-Z0-9\s]", re.ASCII).sub
+
+    # unannotated (scalar is the default): postponed hints naming the
+    # local ``pd`` would not resolve
+    @pandas_udf(
+        "n_tok int, wlen int, stop_hits int, text_len int, plen int"
+    )
+    def counts(texts):
+        def one(text):
+            if text is None:
+                return (None,) * 5
+            toks = tokens(text)
+            return (
+                len(toks),
+                sum(map(len, toks)),
+                sum(t in stop for t in toks),
+                len(text),
+                len(strip_punct("", text)),
             )
+
+        return pd.DataFrame(
+            [one(text) for text in texts],
+            columns=["n_tok", "wlen", "stop_hits", "text_len", "plen"],
+            dtype="Int32",
         )
-        / F.greatest(F.size(toks), F.lit(1)),
+
+    return counts
+
+
+def quality_expr(c) -> dict:
+    """The composite quality score and its parts as Columns over ONE
+    bound kernel struct ``c`` (:func:`_quality_counts_udf` applied to
+    a ``text`` column), keyed by output name: n_tokens, mean_word_len,
+    stopword_ratio, punct_ratio, quality.  Shared by the driver
+    queries (quality_score, quality_histogram_quantiles) and the
+    pipeline job's --drop-bottom-quality-pct gate, so they cannot
+    drift.  Every float operation and ROUND (Spark's HALF_UP --
+    Python's round() is banker's) stays JVM-side, in the operand
+    order of the DuckDB oracle's CTEs."""
+    n_tok = c["n_tok"]
+    stop_ratio = F.round(c["stop_hits"] / F.greatest(n_tok, F.lit(1)), 4)
+    punct_ratio = F.round(
+        (c["text_len"] - c["plen"]) / F.greatest(c["text_len"], F.lit(1)),
         4,
     )
+    cols = {
+        "n_tokens": n_tok,
+        "mean_word_len": F.round(c["wlen"] / F.greatest(n_tok, F.lit(1)), 4),
+        "stopword_ratio": stop_ratio,
+        "punct_ratio": punct_ratio,
+        "quality": F.round(
+            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.4
+            + stop_ratio * 0.3
+            + (1 - punct_ratio) * 0.3,
+            4,
+        ),
+    }
+    return {name: col.alias(name) for name, col in cols.items()}
 
 
-def _punct_ratio_expr():
-    return F.round(
-        (
-            F.length("text")
-            - F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z0-9\\s]", ""))
-        )
-        / F.greatest(F.length("text"), F.lit(1)),
-        4,
-    )
-
-
-def quality_expr():
-    """The composite quality score as a reusable Column over a ``text``
-    column -- shared by the driver query (quality_score over the
-    documents table) and the pipeline job's --drop-bottom-quality-pct
-    gate (over extracted content text), so the two cannot drift."""
-    n_tok = F.size(F.expr(_TOKENS))
-    return F.round(
-        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.4
-        + _stop_ratio_expr() * 0.3
-        + (1 - _punct_ratio_expr()) * 0.3,
-        4,
-    )
+def with_quality_counts(df: DataFrame) -> DataFrame:
+    """``df`` plus the kernel struct bound ONCE as column ``_qc``:
+    every :func:`quality_expr` field then reads that column, so the
+    plan holds one Python-eval node (one kernel call per document)."""
+    return df.withColumn("_qc", _quality_counts_udf()("text"))
 
 
 def quality_score(spark, sf_dir):
     """Composite quality score: length, mean word length, stopword
     ratio, punctuation ratio -- the usual cheap pretraining filters."""
-    docs = read_table(spark, sf_dir, "documents")
-    toks = F.expr(_TOKENS)
-    n_tok = F.size(toks)
-    mean_wl = F.round(
-        F.aggregate(
-            toks, F.lit(0.0), lambda acc, x: acc + F.length(x)
-        )
-        / F.greatest(n_tok, F.lit(1)),
-        4,
-    )
-    stop_ratio = _stop_ratio_expr()
-    punct_ratio = _punct_ratio_expr()
-    score = quality_expr()
+    docs = with_quality_counts(read_table(spark, sf_dir, "documents"))
     return docs.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        mean_wl.alias("mean_word_len"),
-        stop_ratio.alias("stopword_ratio"),
-        punct_ratio.alias("punct_ratio"),
-        score.alias("quality"),
+        "doc_id", *quality_expr(F.col("_qc")).values()
     ).orderBy("doc_id")
 
 
@@ -1413,33 +1437,44 @@ def quality_bin(col) -> "F.Column":
     )
 
 
-def quality_bin_threshold(df: DataFrame, drop_frac: float) -> int:
-    """Distributed 'drop the bottom X%' threshold over a ``quality``
-    column via the same mergeable fixed-bin histogram sketch as
-    :func:`quality_histogram_quantiles`: one <=N_QBINS-key shuffle
-    regardless of corpus size, then the cumulative walk over the
-    collected histogram (bounded at N_QBINS rows -- an O(bins) metric
-    frame, not a data collect).
-
-    Returns the smallest bin whose cumulative count reaches
-    ``ceil(drop_frac * n)``; rows with ``quality_bin(quality) <
-    threshold`` are strictly inside the bottom fraction (ties at the
-    threshold bin are kept, so at most ``drop_frac`` is dropped)."""
-    hist = sorted(
+def _quality_hist(df: DataFrame) -> list:
+    """The mergeable fixed-bin sketch over a ``quality`` column:
+    sorted ``(bin, n)`` pairs from one <=N_QBINS-key shuffle
+    (map-side combinable at any corpus size) -- an O(bins) metric
+    frame on the driver, not a data collect."""
+    return sorted(
         (r["bin"], r["n"])
         for r in df.select(quality_bin("quality").alias("bin"))
         .groupBy("bin")
         .agg(F.count("*").alias("n"))
         .collect()
     )
-    total = sum(n for _, n in hist)
-    target = -(-total * drop_frac // 1)  # ceil
+
+
+def _hist_bin_at(hist: list, frac: float):
+    """The cumulative walk: the smallest bin whose cumulative count
+    reaches ``ceil(frac * n)`` (the last bin if none does; None on an
+    empty histogram)."""
+    target = math.ceil(sum(n for _, n in hist) * frac)
     cum = 0
     for b, n in hist:
         cum += n
         if cum >= target:
-            return int(b)
-    return int(hist[-1][0]) if hist else 0
+            return b
+    return hist[-1][0] if hist else None
+
+
+def quality_bin_threshold(df: DataFrame, drop_frac: float) -> int:
+    """Distributed 'drop the bottom X%' threshold over a ``quality``
+    column via the same histogram sketch and walk as
+    :func:`quality_histogram_quantiles`.
+
+    Returns the smallest bin whose cumulative count reaches
+    ``ceil(drop_frac * n)``; rows with ``quality_bin(quality) <
+    threshold`` are strictly inside the bottom fraction (ties at the
+    threshold bin are kept, so at most ``drop_frac`` is dropped)."""
+    b = _hist_bin_at(_quality_hist(df), drop_frac)
+    return 0 if b is None else int(b)
 
 
 def quality_histogram_quantiles(spark, sf_dir):
@@ -1452,109 +1487,26 @@ def quality_histogram_quantiles(spark, sf_dir):
 
     Determinism: bins come from the 4-dp-rounded quality as INTEGER
     arithmetic (round(q*10000) DIV 10), so no float bin-edge can
-    straddle engines.  The cumulative step is a self-join over the
-    <=1000-row histogram (bounded; avoids a global window), the
-    thresholds one conditional aggregate.  Like approx_distinct_kmv,
-    this is an approximate aggregate that still passes an EXACT
-    cross-engine gate because the sketch itself is deterministic."""
-    # r9: the quality components come from ONE Arrow pass emitting
-    # EXACT INTEGERS (token count, stopword hits, text length,
-    # punct-stripped length) — the declarative quality expression
-    # re-evaluates the interpreted tokenize/filter HOFs several times
-    # per row and alone cost ~9 s at sf1.0.  Every float operation,
-    # ROUND (Spark's HALF_UP — Python's round() is banker's and must
-    # never be used here) and the binning stay JVM-side, built from
-    # those integers with the exact operand order of
-    # ``quality_expr()``, so the result is bit-identical to the
-    # declarative form (the oracle row pins it at every SF).  The
-    # Python ``\\s`` is pinned to ASCII so the punct class matches
-    # Java's (the PII-scrub lesson: unicode \\s has extra members).
-    import re as _re
-
-    import pandas as pd
-
-    _stop = frozenset(STOPWORDS["en"])
-    _punct_re = _re.compile(r"[^a-zA-Z0-9\s]", _re.ASCII)
-
-    def q_parts(batches):
-        for pdf in batches:
-            nt, sh, tl, pl = [], [], [], []
-            for text in pdf["text"]:
-                if text is None:
-                    nt.append(None); sh.append(None)
-                    tl.append(None); pl.append(None)
-                    continue
-                toks = tokens(text)
-                nt.append(len(toks))
-                sh.append(sum(1 for t in toks if t in _stop))
-                tl.append(len(text))
-                pl.append(len(_punct_re.sub("", text)))
-            yield pd.DataFrame(
-                {"n_tok": nt, "stop_hits": sh, "text_len": tl,
-                 "plen": pl}
-            )
-
-    parts = (
-        read_table(spark, sf_dir, "documents", spread=True)
-        .select("text")
-        .mapInPandas(
-            q_parts,
-            "n_tok bigint, stop_hits bigint, text_len bigint, plen bigint",
-        )
+    straddle engines.  The quality comes from the one Arrow kernel
+    (:func:`quality_expr`), the cumulative walk runs on the driver
+    over the collected histogram, and the one-row result (all-null on
+    an empty corpus) divides and rounds JVM-side.  Like
+    approx_distinct_kmv, this is an approximate aggregate that still
+    passes an EXACT cross-engine gate because the sketch itself is
+    deterministic."""
+    docs = read_table(spark, sf_dir, "documents", spread=True)
+    docs = with_quality_counts(docs.select("text"))
+    hist = _quality_hist(docs.select(quality_expr(F.col("_qc"))["quality"]))
+    ps = [f"p{int(qq * 100)}" for qq in QUANTILE_QS]
+    row = [sum(n for _, n in hist) if hist else None]
+    row += [_hist_bin_at(hist, qq) for qq in QUANTILE_QS]
+    out = spark.createDataFrame(
+        [row], ", ".join(f"{c} bigint" for c in ["n_docs", *ps])
     )
-    stop_ratio = F.round(
-        F.col("stop_hits") / F.greatest(F.col("n_tok"), F.lit(1)), 4
+    return out.select(
+        "n_docs",
+        *(F.round(F.col(p) / F.lit(float(N_QBINS)), 3).alias(p) for p in ps),
     )
-    punct_ratio = F.round(
-        (F.col("text_len") - F.col("plen"))
-        / F.greatest(F.col("text_len"), F.lit(1)),
-        4,
-    )
-    quality = F.round(
-        F.least(F.col("n_tok") / F.lit(100.0), F.lit(1.0)) * 0.4
-        + stop_ratio * 0.3
-        + (1 - punct_ratio) * 0.3,
-        4,
-    )
-    q = parts.select(quality.alias("quality"))
-    bins = q.select(
-        F.expr("CAST(round(quality * 10000) AS BIGINT) DIV 10").alias("bin")
-    )
-    # materialize the <=1000-row histogram once per invocation (eager
-    # localCheckpoint): it feeds THREE consumers (both sides of the
-    # cumulative self-join and the total), and each would otherwise
-    # re-run the full corpus quality pass (3 scans -> 1, guide §8:
-    # decide with small rows; measured 7.4 s -> one quality pass at
-    # sf1.0)
-    hist = (
-        bins.groupBy("bin")
-        .agg(F.count("*").alias("n"))
-        .localCheckpoint()
-    )
-    a = hist.alias("a")
-    b = hist.alias("b")
-    cum = (
-        a.join(b, F.col("b.bin") <= F.col("a.bin"))
-        .groupBy(F.col("a.bin").alias("bin"))
-        .agg(F.sum("b.n").alias("cum"))
-    )
-    total = hist.agg(F.sum("n").alias("n_docs"))
-    scored = cum.crossJoin(F.broadcast(total))
-    aggs = [F.max("n_docs").alias("n_docs")]
-    for qq in QUANTILE_QS:
-        aggs.append(
-            F.round(
-                F.min(
-                    F.when(
-                        F.col("cum") >= F.ceil(F.col("n_docs") * qq),
-                        F.col("bin"),
-                    )
-                )
-                / F.lit(float(N_QBINS)),
-                3,
-            ).alias(f"p{int(qq * 100)}")
-        )
-    return scored.agg(*aggs)
 
 
 def _quality_quantiles_sql() -> str:

@@ -342,9 +342,13 @@ def main() -> None:
         # the gram list is the REPRESENTATION: it feeds the splice
         # here AND lands in the dedup index so probes can replay it.
         # An incremental batch splices against the PRIOR corpus's
-        # list UNION its own duplicates -- the same list the rolled
-        # index will record.
-        all_grams = dup_grams_df(training.select("doc_id", "text"))
+        # list UNION its own duplicates -- the list the rolled index
+        # records; the roll merges the prior table in itself, so it
+        # gets only the batch's own list.
+        dup_grams_pin = dup_grams_df(
+            training.select("doc_id", "text")
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        splice_grams = dup_grams_pin
         if args.incremental:
             from boilerpipe_coffee_spark.operators.dedup import (
                 read_index_meta,
@@ -359,18 +363,17 @@ def main() -> None:
                 )
             # explicit schema: an index over a corpus with NO
             # surviving cross-doc spans has an EMPTY (file-less)
-            # dup_grams table, which schema inference cannot read
-            all_grams = (
+            # dup_grams table, which schema inference cannot read.
+            # No distinct here: the splice dedups its gram frame.
+            splice_grams = (
                 spark.read.schema("g bigint")
                 .parquet(os.path.join(prior_idx, "dup_grams"))
-                .unionByName(all_grams)
-                .distinct()
+                .unionByName(dup_grams_pin)
             )
-        dup_grams_pin = all_grams.persist(StorageLevel.MEMORY_AND_DISK)
         scrub_pin = dup_span_scrub_df(
             training.select("doc_id", "text"),
             normal_form=False,
-            grams=dup_grams_pin,
+            grams=splice_grams,
         ).persist(StorageLevel.MEMORY_AND_DISK)
         row = scrub_pin.agg(
             F.sum((F.col("removed_tokens") > 0).cast("int")).alias("d"),
@@ -429,6 +432,14 @@ def main() -> None:
     ).hexdigest()[:8]
     training_dir = os.path.join(args.output, "training")
     training_table = f"bpc_training_{tbl_tag}"
+    if training_pinned is not None:
+        # a pinned keep-set reaches the write with rows of many buckets
+        # per task: the 4c/4d pin keeps near_dup_keep's doc_id shuffle
+        # at its full, un-coalesced width (cached plans keep their
+        # output partitioning) and the gate's anti-join re-shuffles.
+        # One partition per bucket gives one writer per bucket; the
+        # default path never pins and needs no extra exchange.
+        training = training.repartition(N_OUT_BUCKETS, "doc_id")
     write_bucketed(
         training, training_table, training_dir, "doc_id",
         n_buckets=N_OUT_BUCKETS,

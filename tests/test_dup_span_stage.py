@@ -8,6 +8,7 @@ determined by the planted block: injected docs have
 dup_frac ~ 49/129 ~ 0.38, clean docs exactly 0.0 — a 0.2 threshold
 separates them with a wide margin on both sides."""
 
+import glob
 import json
 import os
 import subprocess
@@ -35,13 +36,9 @@ def _corpus_rows():
     return rows
 
 
-def test_pipeline_dup_span_scrub_e2e(spark, tmp_path_factory):
-    """--scrub-dup-spans: the same planted corpus goes through the
-    full job, but instead of dropping boilerplate-heavy docs the
-    shared block is SPLICED OUT of their text.  No rows drop; the
-    injected docs keep exactly their own 80 unique words (bytes
-    preserved); n_tokens is the post-scrub count."""
-    base = tmp_path_factory.mktemp("dupspan_scrub_stage")
+def _run_job(spark, tmp_path_factory, name, *flags):
+    """The planted corpus through the full job -> (summary, out dir)."""
+    base = tmp_path_factory.mktemp(name)
     in_dir = str(base / "input")
     out = str(base / "out")
     spark.createDataFrame(_corpus_rows(), INTERLEAVED_SCHEMA).write.parquet(
@@ -53,7 +50,7 @@ def test_pipeline_dup_span_scrub_e2e(spark, tmp_path_factory):
     proc = subprocess.run(
         [
             sys.executable, JOB, "--input", in_dir, "--output", out,
-            "--buckets", "4", "--scrub-dup-spans", "--no-near-dup",
+            "--buckets", "4", *flags,
         ],
         cwd=REPO, capture_output=True, text=True, timeout=900, env=env,
     )
@@ -64,7 +61,19 @@ def test_pipeline_dup_span_scrub_e2e(spark, tmp_path_factory):
         f"no summary JSON; rc={proc.returncode} "
         f"stderr tail: {proc.stderr[-2000:]}"
     )
-    s = json.loads(lines[-1])
+    return json.loads(lines[-1]), out
+
+
+def test_pipeline_dup_span_scrub_e2e(spark, tmp_path_factory):
+    """--scrub-dup-spans: the same planted corpus goes through the
+    full job, but instead of dropping boilerplate-heavy docs the
+    shared block is SPLICED OUT of their text.  No rows drop; the
+    injected docs keep exactly their own 80 unique words (bytes
+    preserved); n_tokens is the post-scrub count."""
+    s, out = _run_job(
+        spark, tmp_path_factory, "dupspan_scrub_stage",
+        "--scrub-dup-spans", "--no-near-dup",
+    )
 
     assert s["extracted"] == N_DOCS and s["quarantined"] == 0
     # scrub never drops rows
@@ -102,34 +111,14 @@ def test_pipeline_dup_span_scrub_e2e(spark, tmp_path_factory):
 
 
 def test_pipeline_dup_span_gate_e2e(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("dupspan_stage")
-    in_dir = str(base / "input")
-    out = str(base / "out")
-    spark.createDataFrame(_corpus_rows(), INTERLEAVED_SCHEMA).write.parquet(
-        in_dir
+    s, out = _run_job(
+        spark, tmp_path_factory, "dupspan_stage",
+        "--max-dup-span-frac", "0.2",
+        # isolate the gate: the injected docs share only ~43% of
+        # their tokens, but MinHash banding could still pair some
+        # of them — stage 4 off keeps the drop attribution exact
+        "--no-near-dup", "--emit-chunks",
     )
-
-    env = dict(os.environ)
-    env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
-    proc = subprocess.run(
-        [
-            sys.executable, JOB, "--input", in_dir, "--output", out,
-            "--buckets", "4", "--max-dup-span-frac", "0.2",
-            # isolate the gate: the injected docs share only ~43% of
-            # their tokens, but MinHash banding could still pair some
-            # of them — stage 4 off keeps the drop attribution exact
-            "--no-near-dup", "--emit-chunks",
-        ],
-        cwd=REPO, capture_output=True, text=True, timeout=900, env=env,
-    )
-    lines = [
-        l for l in proc.stdout.strip().splitlines() if l.startswith("{")
-    ]
-    assert lines, (
-        f"no summary JSON; rc={proc.returncode} "
-        f"stderr tail: {proc.stderr[-2000:]}"
-    )
-    s = json.loads(lines[-1])
 
     assert s["extracted"] == N_DOCS and s["quarantined"] == 0
     assert s["dup_span_dropped"] == N_INJECTED, s
@@ -155,3 +144,41 @@ def test_pipeline_dup_span_gate_e2e(spark, tmp_path_factory):
     ).fetchone()[0]
     assert n_chunk_docs == N_DOCS - N_INJECTED
     con.close()
+
+
+def test_pipeline_gated_training_lands_one_file_per_bucket(
+    spark, tmp_path_factory
+):
+    """Near-dup ON with both the 4c gate and the 4d splice: the keep-set
+    those stages pin must still land at most one file per doc_id
+    bucket (run_pipeline.N_OUT_BUCKETS = 8), and its rows are exactly
+    the spliced planted docs."""
+    s, out = _run_job(
+        spark, tmp_path_factory, "dupspan_both",
+        "--max-dup-span-frac", "0.6", "--scrub-dup-spans",
+    )
+    files = glob.glob(os.path.join(out, "training", "*.parquet"))
+    assert 0 < len(files) <= 8, len(files)
+
+    con = duckdb.connect()
+    rows = con.sql(
+        "SELECT doc_id, text, n_tokens, dup_span_removed_tokens FROM "
+        f"read_parquet('{out}/training/*.parquet') ORDER BY doc_id"
+    ).fetchall()
+    con.close()
+    # no doc crosses 0.6; MinHash pairs some injected docs through the
+    # shared block (seeded, so the same ones every run) and the kept
+    # injected docs lose exactly the block
+    near_dups = {3, 4, 7, 10, 12, 13, 14, 15, 16, 17, 18}
+    want = [
+        (
+            f"d{i:04d}",
+            " ".join(f"d{i}w{j}" for j in range(80)),
+            80,
+            60 if i < N_INJECTED else 0,
+        )
+        for i in range(N_DOCS)
+        if i not in near_dups
+    ]
+    assert s["kept"] == len(rows)
+    assert rows == want
