@@ -4,9 +4,11 @@ ONE implementation of the extract-output -> training-candidate
 transform, consumed by both the driver-contract query
 (``__spark_entry__.pretrain_pipeline``) and the deployable job
 (``jobs/run_pipeline.py``) so the two can never drift: content text
-reassembly from surviving spans, token count, duplicate-bigram
-fraction (repetition gate), md5 content hash, exact-dedup canonical
-flag, and the combined keep decision.
+reassembly from surviving spans, the per-document counts of the one
+text kernel (:func:`.textstats._quality_counts_udf`: token count,
+duplicate-bigram fraction for the repetition gate, quality score),
+md5 content hash, exact-dedup canonical flag, and the combined keep
+decision.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import TOKENS, shingles
+from . import textstats as ts
 
 
 def content_features(
@@ -25,10 +27,13 @@ def content_features(
     """(doc_id, title, spans, error) -> featured rows.
 
     Output columns: doc_id, title, text, n_media, n_tokens,
-    dup_bigram_frac, content_hash, is_canonical (first doc_id per
-    content hash), passes_gates (length + repetition), keep (both).
-    Quarantined and empty documents are dropped.  All stages are
-    columnar; the only shuffle is the content-hash window."""
+    dup_bigram_frac, quality, content_hash, is_canonical (first doc_id
+    per content hash), passes_gates (length + repetition), keep (both).
+    Quarantined and empty documents are dropped.  n_tokens,
+    dup_bigram_frac and quality come from ONE call per document of the
+    per-document kernel (:func:`.textstats.with_quality_counts`), with
+    every float operation and rounding JVM-side; the rest is columnar.
+    The only shuffle is the content-hash window."""
     content = (
         extracted.filter(F.col("error").isNull())
         .select(
@@ -47,27 +52,21 @@ def content_features(
         )
         .filter(F.length("text") > 0)
     )
-    # tokens and bigrams bound to columns ONCE: shingles() inlines its
-    # token expression per use, and inside the transform lambda that
-    # is one regex split per bigram (CSE does not reach into lambdas)
-    grams = F.col("grams")
+    # the one per-document kernel, bound once: every derived column
+    # reads the struct, so the plan holds one Python-eval node
+    qc = F.col("_qc")
     dup_bigram = F.round(
-        (F.size(grams) - F.size(F.array_distinct(grams)))
-        / F.greatest(F.size(grams), F.lit(1)),
-        4,
+        (qc["n_bi"] - qc["n_bi_uniq"]) / F.greatest(qc["n_bi"], F.lit(1)), 4
     )
-    featured = (
-        content.withColumn("toks", F.expr(TOKENS))
-        .withColumn("grams", F.expr(shingles(2, "toks")))
-        .select(
-            "doc_id",
-            "title",
-            "text",
-            "n_media",
-            F.size("toks").alias("n_tokens"),
-            dup_bigram.alias("dup_bigram_frac"),
-            F.md5("text").alias("content_hash"),
-        )
+    featured = ts.with_quality_counts(content).select(
+        "doc_id",
+        "title",
+        "text",
+        "n_media",
+        qc["n_tok"].alias("n_tokens"),
+        dup_bigram.alias("dup_bigram_frac"),
+        ts.quality_expr(qc)["quality"],
+        F.md5("text").alias("content_hash"),
     )
     w = Window.partitionBy("content_hash").orderBy("doc_id")
     gates = (F.col("n_tokens") >= min_tokens) & (
@@ -86,31 +85,24 @@ def quality_gate(
     features: DataFrame, drop_bottom_pct: float
 ) -> tuple[DataFrame, float]:
     """Data-driven quality gate: drop the bottom ``drop_bottom_pct``
-    percent of documents by composite quality score -- the one Arrow
-    kernel and Column builder of the ``quality_score`` driver query
-    (:func:`..operators.textstats.quality_expr`) -- with the threshold
-    picked by the distributed histogram sketch
+    percent of documents by the ``quality`` column
+    :func:`content_features` computes, with the threshold picked by
+    the distributed histogram sketch
     (:func:`..operators.textstats.quality_bin_threshold` -- a
     <=1000-key shuffle at any corpus size, no global sort).
 
-    Input: :func:`content_features` output.  Returns (gated frame,
-    picked threshold): adds ``quality`` and ``passes_quality`` and
-    folds the quality decision into ``passes_gates`` / ``keep`` so
-    downstream stages (exact keep-set, near-dup) see one combined
-    gate.  Ties AT the threshold bin are kept, so at most the
+    Input: :func:`content_features` output; it must carry ``quality``.
+    The gate runs no kernel, so over a persisted input nothing above
+    the cache re-tokenizes.  Returns (gated frame, picked threshold):
+    adds ``passes_quality`` and folds it into ``passes_gates`` /
+    ``keep`` so downstream stages (exact keep-set, near-dup) see one
+    combined gate.  Ties AT the threshold bin are kept, so at most the
     requested fraction is dropped (deterministic -- no row-order
     dependence)."""
-    from . import textstats as ts
-
-    scored = (
-        ts.with_quality_counts(features)
-        .withColumn("quality", ts.quality_expr(F.col("_qc"))["quality"])
-        .drop("_qc")
-    )
-    thr_bin = ts.quality_bin_threshold(scored, drop_bottom_pct / 100.0)
+    thr_bin = ts.quality_bin_threshold(features, drop_bottom_pct / 100.0)
     passes = ts.quality_bin("quality") >= F.lit(thr_bin)
     gated = (
-        scored.withColumn("passes_quality", passes)
+        features.withColumn("passes_quality", passes)
         .withColumn(
             "passes_gates", F.col("passes_gates") & F.col("passes_quality")
         )
@@ -127,9 +119,8 @@ def emit_chunks(training: DataFrame, context_len: int | None = None) -> DataFram
     ``explode`` inside the row, linear in output size; the chunking
     arithmetic is shared with the ``doc_chunks`` driver query."""
     from ..functions import TOKENS
-    from .textstats import CONTEXT_LEN
 
-    cl = context_len or CONTEXT_LEN
+    cl = context_len or ts.CONTEXT_LEN
     d = (
         training.select("doc_id", F.expr(TOKENS).alias("toks"))
         .withColumn("n_tokens", F.size("toks"))

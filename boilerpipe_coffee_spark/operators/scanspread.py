@@ -35,9 +35,6 @@ row values is cached or reused across runs.
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 # per-task work floor for the Python-heavy document stages (see
@@ -61,19 +58,16 @@ def barrier_pays(n_rows: int) -> bool:
 
 
 def _layout(path: str, row_cap: int, quanta_cap: int) -> "tuple[int, int]":
-    """(total rows, total row groups) under ``path``, each early-
-    exiting at its cap (all we need is whether the layout can feed
-    ``quanta_cap`` tasks and whether the table has enough rows to
-    want them)."""
-    import pyarrow.parquet as pq
+    """(total rows, total row groups) of the parquet files under
+    ``path`` (one file, or a directory at any depth -- hive
+    partitions included), each early-exiting at its cap (all we need
+    is whether the layout can feed ``quanta_cap`` tasks and whether
+    the table has enough rows to want them)."""
+    import pyarrow.dataset as ds
 
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = glob.glob(os.path.join(path, "*.parquet"))
     rows = quanta = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
+    for frag in ds.dataset(path, format="parquet").get_fragments():
+        md = frag.metadata
         rows += md.num_rows
         quanta += md.num_row_groups
         if rows >= row_cap and quanta >= quanta_cap:
@@ -89,15 +83,17 @@ def spread_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     deterministic under Spark's sort-before-repartition default, and
     every consumer here is either order-insensitive or re-sorted
     downstream."""
+    import pyarrow as pa
+
     par = spark.sparkContext.defaultParallelism
     try:
         rows, quanta = _layout(path, par * MIN_ROWS_PER_TASK, par)
-        target = min(par, rows // MIN_ROWS_PER_TASK)
-        if target <= 1 or quanta >= target:
-            return df
-    except Exception:
-        # unreadable/foreign layout: never let the optimization
-        # break the read path
+    except (OSError, pa.ArrowInvalid):
+        # unreadable layout: never let the optimization break the
+        # read path (a missing pyarrow or a bug still raises)
+        return df
+    target = min(par, rows // MIN_ROWS_PER_TASK)
+    if target <= 1 or quanta >= target:
         return df
     return df.repartition(target)
 

@@ -75,11 +75,12 @@ FROM h ORDER BY doc_id
 
 
 def _quality_counts_udf():
-    """The per-document quality kernel: one Arrow pass over ``text``
-    emitting EXACT INTEGERS -- token count, summed token length,
-    stopword hits, text length, punct-stripped length (null text ->
-    nulls).  Built per call: a DDL-typed ``pandas_udf`` needs a live
-    session to parse its return type."""
+    """The per-document kernel: one Arrow pass over ``text`` emitting
+    EXACT INTEGERS -- token count, summed token length, stopword hits,
+    text length, punct-stripped length, word-bigram count and distinct
+    word-bigram count (null text -> nulls).  Built per call: a
+    DDL-typed ``pandas_udf`` needs a live session to parse its return
+    type."""
     import re
 
     import pandas as pd
@@ -89,28 +90,31 @@ def _quality_counts_udf():
     # ASCII \s == Java's \s (unicode \s also matches \x1c-\x1f)
     strip_punct = re.compile(r"[^a-zA-Z0-9\s]", re.ASCII).sub
 
+    cols = ["n_tok", "wlen", "stop_hits", "text_len", "plen", "n_bi",
+            "n_bi_uniq"]
+
     # unannotated (scalar is the default): postponed hints naming the
     # local ``pd`` would not resolve
-    @pandas_udf(
-        "n_tok int, wlen int, stop_hits int, text_len int, plen int"
-    )
+    @pandas_udf(", ".join(f"{c} int" for c in cols))
     def counts(texts):
         def one(text):
             if text is None:
-                return (None,) * 5
+                return (None,) * len(cols)
             toks = tokens(text)
+            # tokens hold no space, so a (left, right) pair is the
+            # ' '-joined bigram string
             return (
                 len(toks),
                 sum(map(len, toks)),
                 sum(t in stop for t in toks),
                 len(text),
                 len(strip_punct("", text)),
+                max(len(toks) - 1, 0),
+                len(set(zip(toks, toks[1:]))),
             )
 
         return pd.DataFrame(
-            [one(text) for text in texts],
-            columns=["n_tok", "wlen", "stop_hits", "text_len", "plen"],
-            dtype="Int32",
+            [one(text) for text in texts], columns=cols, dtype="Int32"
         )
 
     return counts
@@ -121,9 +125,10 @@ def quality_expr(c) -> dict:
     bound kernel struct ``c`` (:func:`_quality_counts_udf` applied to
     a ``text`` column), keyed by output name: n_tokens, mean_word_len,
     stopword_ratio, punct_ratio, quality.  Shared by the driver
-    queries (quality_score, quality_histogram_quantiles) and the
-    pipeline job's --drop-bottom-quality-pct gate, so they cannot
-    drift.  Every float operation and ROUND (Spark's HALF_UP --
+    queries (quality_score, quality_histogram_quantiles) and
+    ``pretrain.content_features`` (whose ``quality`` column the
+    pipeline job's --drop-bottom-quality-pct gate reads), so they
+    cannot drift.  Every float operation and ROUND (Spark's HALF_UP --
     Python's round() is banker's) stays JVM-side, in the operand
     order of the DuckDB oracle's CTEs."""
     n_tok = c["n_tok"]

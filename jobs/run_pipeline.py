@@ -258,14 +258,11 @@ def main() -> None:
         features, quality_threshold = quality_gate(
             features, args.drop_bottom_quality_pct
         )
-        features = features.drop("quality", "passes_quality")
         tick("quality_gate")
 
     # stage 4: near-dup keepers over the exact-dedup survivors
     if args.no_near_dup:
-        training = features.filter(F.col("keep")).drop(
-            "is_canonical", "passes_gates", "keep"
-        )
+        training = features.filter(F.col("keep"))
         exact_kept = None
     else:
         exact_kept = features.filter(F.col("keep")).count()
@@ -274,10 +271,14 @@ def main() -> None:
         # banding -- no extra pass over the survivors
         training = near_dup_keep(
             features, checkpoint_dir=args.checkpoint_dir, n_docs=exact_kept
-        ).filter(
-            F.col("keep_final")
-        ).drop("is_canonical", "passes_gates", "keep", "keep_final")
+        ).filter(F.col("keep_final")).drop("keep_final")
         tick("near_dup_components")
+    # the gate columns end here on every path: training/ carries the
+    # same schema with or without the quality gate (drop ignores a
+    # column the frame does not have)
+    training = training.drop(
+        "quality", "passes_quality", "is_canonical", "passes_gates", "keep"
+    )
 
     # stage 4c: cross-doc duplicated-span (boilerplate) gate over the
     # keep-set.  The flagged frame is O(dropped docs); persist it so

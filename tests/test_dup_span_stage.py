@@ -15,6 +15,7 @@ import subprocess
 import sys
 
 import duckdb
+import pyarrow.parquet as pq
 
 from boilerpipe_coffee_spark.sources import INTERLEAVED_SCHEMA
 
@@ -24,6 +25,11 @@ JOB = os.path.join(REPO, "jobs", "run_pipeline.py")
 N_DOCS = 40
 N_INJECTED = 20
 BOILER = " ".join(f"boilerqq{i}" for i in range(60))
+# training/ columns of a near-dup run with --scrub-dup-spans
+UNGATED_COLS = [
+    "doc_id", "title", "n_media", "dup_bigram_frac", "content_hash",
+    "cluster_id", "text", "n_tokens", "dup_span_removed_tokens",
+]
 
 
 def _corpus_rows():
@@ -149,16 +155,24 @@ def test_pipeline_dup_span_gate_e2e(spark, tmp_path_factory):
 def test_pipeline_gated_training_lands_one_file_per_bucket(
     spark, tmp_path_factory
 ):
-    """Near-dup ON with both the 4c gate and the 4d splice: the keep-set
-    those stages pin must still land at most one file per doc_id
-    bucket (run_pipeline.N_OUT_BUCKETS = 8), and its rows are exactly
-    the spliced planted docs."""
+    """Near-dup ON with the quality gate, the 4c gate and the 4d
+    splice: the keep-set those stages pin must still land at most one
+    file per doc_id bucket (run_pipeline.N_OUT_BUCKETS = 8), its rows
+    are exactly the spliced planted docs, and its columns are those of
+    the same run without the quality gate.  Dropping the bottom 0%
+    keeps every document, so the gate changes no row."""
     s, out = _run_job(
         spark, tmp_path_factory, "dupspan_both",
         "--max-dup-span-frac", "0.6", "--scrub-dup-spans",
+        "--drop-bottom-quality-pct", "0",
     )
+    assert "quality_gate" in s["stage_sec"], s
     files = glob.glob(os.path.join(out, "training", "*.parquet"))
     assert 0 < len(files) <= 8, len(files)
+
+    # the training/ schema of this flag set without the quality gate
+    cols = pq.read_schema(files[0]).names
+    assert cols == UNGATED_COLS, cols
 
     con = duckdb.connect()
     rows = con.sql(

@@ -80,9 +80,33 @@ def test_spread_noop_when_layout_already_feeds_cluster(spark, tmp_path):
     assert spread_scan(spark, df, p) is df
 
 
+def test_spread_fires_on_hive_partitioned_table(spark, tmp_path):
+    """A partitioned directory (``part=N/*.parquet``, no file at its
+    top level) with one row group per file is counted, and spread."""
+    p = tmp_path / "parted"
+    n_parts, per = 2, MIN_ROWS_PER_TASK * 2
+    for k in range(n_parts):
+        (p / f"part={k}").mkdir(parents=True)
+        _write_single_group(spark, str(p / f"part={k}" / "f.parquet"), per)
+    df = spark.read.parquet(str(p))
+    out = spread_scan(spark, df, str(p))
+    par = spark.sparkContext.defaultParallelism
+    want = min(par, n_parts * per // MIN_ROWS_PER_TASK)
+    assert want > n_parts  # two row groups cannot feed the target
+    assert out.rdd.getNumPartitions() == want
+    assert out.count() == n_parts * per
+
+
 def test_spread_noop_on_unreadable_path(spark):
     df = spark.range(5)
     assert spread_scan(spark, df, "/nonexistent/nowhere.parquet") is df
+
+
+def test_spread_noop_on_corrupt_file(spark, tmp_path):
+    p = tmp_path / "bad.parquet"
+    p.write_bytes(b"not parquet at all")
+    df = spark.range(5)
+    assert spread_scan(spark, df, str(p)) is df
 
 
 def test_barrier_pays_crossover():

@@ -377,7 +377,6 @@ def expected_keep_set(
     ).persist()
 
     features, _thr = quality_gate(features, 5)
-    features = features.drop("quality", "passes_quality")
     exact_kept = features.filter(F.col("keep")).count()
     training = near_dup_keep(features, n_docs=exact_kept).filter(
         F.col("keep_final")
