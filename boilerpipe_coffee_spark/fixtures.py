@@ -32,11 +32,6 @@ LOREM = (
 ).split(" ")
 
 
-def example_text(n: int) -> str:
-    """TestHelper.exampleText: first n lorem words."""
-    return " ".join(LOREM[:n])
-
-
 def _words(rng: random.Random, lo: int, hi: int) -> str:
     n = rng.randint(lo, hi)
     start = rng.randrange(0, len(LOREM) - 1)

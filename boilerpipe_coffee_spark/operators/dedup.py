@@ -13,8 +13,11 @@ compute bit-identical values:
   signatures, 4 bands of 2); band-equality buckets yield candidate
   pairs without the N^2 join -- the 100 TB-scale path (shuffle keyed
   on band values, skew-safe since signatures are uniform).
-- SimHash: 32-bit sign-sketch of the token set; near-dup candidates
+- SimHash: 64-bit sign-sketch of the token set; near-dup candidates
   have small Hamming distance.
+
+Both LSH families pair documents inside capped hash buckets through
+one generator, :func:`_in_bucket_pairs`.
 
 Scale note: at 10^12 docs the Jaccard self-join is infeasible (its
 shingle join explodes); minhash bands keep the shuffle linear in corpus
@@ -116,9 +119,11 @@ def minhash_banding(n_docs: int) -> "tuple[int, int]":
 _SHINGLES_DUCK = _mk_shingles_duck(3)
 
 # band-bucket skew cap, shared by the Spark operator AND the DuckDB
-# oracle CTEs so capped semantics stay value-identical; non-default
-# caps therefore diverge from oracle_sql() and are for ad-hoc use only
+# oracle CTEs so capped semantics stay value-identical
 BUCKET_CAP = 64
+# verified-pair cuts, likewise shared with the oracle CTEs
+JACCARD_THRESHOLD = 0.5
+SIMHASH_MAX_HAMMING = 3
 
 
 # ------------------------------------------------------------------ #
@@ -146,7 +151,7 @@ FROM documents GROUP BY md5(text) ORDER BY content_hash
 # ------------------------------------------------------------------ #
 
 
-def dedup_ngram_jaccard(spark, sf_dir, threshold: float = 0.5):
+def dedup_ngram_jaccard(spark, sf_dir):
     docs = (
         read_table(spark, sf_dir, "documents")
         .select("doc_id", F.expr(_TOKENS).alias("toks"))
@@ -184,7 +189,7 @@ def dedup_ngram_jaccard(spark, sf_dir, threshold: float = 0.5):
     )
     return (
         pairs.select("doc_a", "doc_b", jacc.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
 
@@ -208,7 +213,7 @@ WITH sets AS (
 SELECT doc_a, doc_b,
        round(inter / (size_a + size_b - inter), 4) AS jaccard
 FROM pairs
-WHERE round(inter / (size_a + size_b - inter), 4) >= 0.5
+WHERE round(inter / (size_a + size_b - inter), 4) >= {JACCARD_THRESHOLD}
 ORDER BY doc_a, doc_b
 """
 
@@ -216,10 +221,60 @@ ORDER BY doc_a, doc_b
 # ------------------------------------------------------------------ #
 
 
+def _in_bucket_pairs(
+    rows: DataFrame,
+    keys: "list[str]",
+    bucket_cap: int,
+    payload: "str | None" = None,
+) -> DataFrame:
+    """The one in-bucket pair generator of the LSH families: (doc_id,
+    *keys[, payload]) rows -> (doc_a, doc_b[, <payload>_a,
+    <payload>_b]) for every two rows that share a bucket of at most
+    ``bucket_cap`` rows, doc_a < doc_b, NOT distinct.
+
+    The flood-safe ``bucket_n`` window drops buckets over the cap
+    before anything is collected; the groupBy on the same ``keys``
+    then reuses the window's exchange and collects each surviving
+    bucket's rows sorted by doc_id (at most ``bucket_cap``), and the
+    pairs are generated inside the row.  Same pairs as the capped
+    bucket self-join of the oracle CTEs, whose two aliases would each
+    re-run the signature pass feeding ``rows``, so that pass has ONE
+    consumer at every scale and needs no materialization barrier."""
+    from pyspark.sql import Window
+
+    bucket_n = F.count("*").over(Window.partitionBy(*keys))
+    item = F.col("doc_id") if payload is None else F.struct("doc_id", payload)
+    buckets = (
+        rows.withColumn("bucket_n", bucket_n)
+        .filter(F.col("bucket_n") <= bucket_cap)
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(item)).alias("ids"))
+        # a lone id pairs with nothing, and sequence(0, -1) below
+        # would count down instead of coming out empty
+        .filter(F.size("ids") >= 2)
+    )
+
+    def side(e: str, s: str) -> str:
+        if payload is None:
+            return f"'doc_{s}', {e}"
+        return f"'doc_{s}', {e}.doc_id, '{payload}_{s}', {e}.{payload}"
+
+    in_bucket = F.expr(
+        "flatten(transform(sequence(0, size(ids) - 2), i -> "
+        "transform(sequence(i + 1, size(ids) - 1), j -> "
+        f"named_struct({side('ids[i]', 'a')}, {side('ids[j]', 'b')}))))"
+    )
+    return (
+        buckets.select(F.explode(in_bucket).alias("p"))
+        .select("p.*")
+        # equal ids only come from repeated doc_id rows
+        .filter(F.col("doc_a") < F.col("doc_b"))
+    )
+
+
 def minhash_candidate_pairs(
     docs: DataFrame,
     bucket_cap: int = BUCKET_CAP,
-    banding: "tuple[int, int] | None" = None,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Distinct (doc_a < doc_b) candidate pairs over ANY (doc_id,
@@ -231,65 +286,31 @@ def minhash_candidate_pairs(
     when the caller already knows the corpus size (the pipeline job
     counts survivors for its summary anyway -- no extra pass), else
     one ``docs.count()`` derives it (a parquet-footer metadata count
-    on plain scans).  An explicit ``banding`` tuple overrides both.
-
-    Plan shape: the Arrow signature pass has exactly ONE consumer, so
-    it runs once at every scale.  The flood-safe ``bucket_n`` window
-    drops buckets over ``bucket_cap`` before anything is collected;
-    the ``band_key`` groupBy then reuses the window's exchange and
-    collects each surviving bucket's sorted doc_ids (at most
-    ``bucket_cap``), and the in-bucket pairs are generated inside the
-    row.  Same pairs as the capped band self-join of the oracle CTEs,
-    whose two aliases would each re-run the signature pass."""
-    from pyspark.sql import Window
-
-    if banding is None:
-        if n_docs is None:
-            n_docs = docs.count()
-        banding = minhash_banding(n_docs)
-    bucket_n = F.count("*").over(Window.partitionBy("band_key"))
-    buckets = (
-        minhash_bands_df(docs, banding)
-        .withColumn("bucket_n", bucket_n)
-        .filter(F.col("bucket_n") <= bucket_cap)
-        .groupBy("band_key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        # a lone id pairs with nothing, and sequence(0, -1) below
-        # would count down instead of coming out empty
-        .filter(F.size("ids") >= 2)
-    )
-    in_bucket = F.expr(
-        "flatten(transform(sequence(0, size(ids) - 2), i -> "
-        "transform(sequence(i + 1, size(ids) - 1), j -> "
-        "named_struct('doc_a', ids[i], 'doc_b', ids[j]))))"
-    )
-    return (
-        buckets.select(F.explode(in_bucket).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        # equal ids only come from repeated doc_id rows
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .distinct()
-    )
+    on plain scans).  The pairs come from :func:`_in_bucket_pairs`
+    over the ``band_key`` rows, so the Arrow signature pass runs once
+    at every scale."""
+    if n_docs is None:
+        n_docs = docs.count()
+    bands = minhash_bands_df(docs, minhash_banding(n_docs))
+    return _in_bucket_pairs(bands, ["band_key"], bucket_cap).distinct()
 
 
-def _minhash_pairs(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
+def _minhash_pairs(spark, sf_dir):
     # corpus size from the UN-spread scan (parquet-footer metadata
     # count); the spread frame's count() would execute the repartition
     n_docs = read_table(spark, sf_dir, "documents").count()
     return minhash_candidate_pairs(
-        read_table(spark, sf_dir, "documents", spread=True),
-        bucket_cap,
-        n_docs=n_docs,
+        read_table(spark, sf_dir, "documents", spread=True), n_docs=n_docs
     )
 
 
-def dedup_minhash_lsh(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
+def dedup_minhash_lsh(spark, sf_dir):
     """MinHash signatures + banded LSH candidate pairs.
 
     Skew guard: a band bucket holding B docs emits B^2/2 pairs, so a
     flood of identical boilerplate (millions of copies of one page)
-    would turn the band join quadratic.  Buckets larger than
-    ``bucket_cap`` are dropped from the candidate join -- membership in
+    would turn the band pairing quadratic.  Buckets larger than
+    ``BUCKET_CAP`` are dropped from the candidate pairs -- membership in
     a flood bucket means near-exact duplication, which the exact-dedup
     pass (hash groupBy, linear) already resolves; the LSH pass exists
     for the long tail of NEAR duplicates.  The DuckDB oracle applies
@@ -297,9 +318,7 @@ def dedup_minhash_lsh(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     parity invariant holds even on flood corpora;
     ``minhash_band_stats`` reports dropped buckets for monitoring.
     """
-    return _minhash_pairs(spark, sf_dir, bucket_cap).orderBy(
-        "doc_a", "doc_b"
-    )
+    return _minhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
 def minhash_sigs_df(docs_in: DataFrame, n_sig: int = 8) -> DataFrame:
@@ -373,7 +392,7 @@ def minhash_bands_df(
     )
 
 
-def minhash_band_stats(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
+def minhash_band_stats(spark, sf_dir):
     """Monitoring companion to the skew guard: bucket-size histogram
     plus how many buckets/docs the cap would drop."""
     docs = read_table(spark, sf_dir, "documents")
@@ -385,11 +404,13 @@ def minhash_band_stats(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     return counts.agg(
         F.count("*").alias("n_buckets"),
         F.max("bucket_n").alias("max_bucket"),
-        F.sum(F.when(F.col("bucket_n") > bucket_cap, 1).otherwise(0)).alias(
+        F.sum(F.when(F.col("bucket_n") > BUCKET_CAP, 1).otherwise(0)).alias(
             "buckets_dropped"
         ),
         F.sum(
-            F.when(F.col("bucket_n") > bucket_cap, F.col("bucket_n")).otherwise(0)
+            F.when(
+                F.col("bucket_n") > BUCKET_CAP, F.col("bucket_n")
+            ).otherwise(0)
         ).alias("docs_in_dropped"),
     )
 
@@ -571,39 +592,19 @@ SELECT doc_id, simhash FROM sig ORDER BY doc_id
 
 
 # ------------------------------------------------------------------ #
-# SimHash candidate pairs: chunk-bucketed Hamming join                 #
+# SimHash candidate pairs: chunk-bucketed Hamming pairs              #
 # ------------------------------------------------------------------ #
 
 
-def dedup_simhash_pairs(
-    spark, sf_dir, max_hamming: int = 3, bucket_cap: int = BUCKET_CAP
-):
-    """Near-dup candidate pairs from the 64-bit SimHash WITHOUT an
-    all-pairs scan: split the signature into 4 x 16-bit chunks -- by
-    pigeonhole, any pair within Hamming distance <= 3 agrees on at
-    least one whole chunk -- join on the combined chunk key, then
-    verify exact Hamming distance columnar with bit_count(a XOR b).
-    65,536 possible values per chunk index (vs 256 for the old byte
-    chunks) keep buckets thin as the corpus grows, and -- same skew
-    guard as :func:`dedup_minhash_lsh` -- buckets larger than
-    ``bucket_cap`` are dropped from the join entirely: membership in a
-    flood bucket means near-exact duplication, which the exact-dedup
-    pass already resolves linearly.  The DuckDB oracle applies the SAME
-    cap (shared ``BUCKET_CAP`` constant), so parity holds on flood
-    corpora; the cap is counted by a window on ``chunk_key``, whose
-    hash partitioning is exactly what the self-join needs, so the
-    guard adds no extra exchange."""
-    from pyspark.sql import Window
-
-    # unsorted signatures: dedup_simhash's presentation orderBy would
-    # inject a global range exchange per join side for nothing
-    from .scanspread import barrier_pays
-
-    n_docs = read_table(spark, sf_dir, "documents").count()  # metadata count
+def _simhash_chunks(spark, sf_dir) -> DataFrame:
+    """(doc_id, simhash, chunk_key) rows, 4 per document: the 64-bit
+    SimHash split into 4 x 16-bit chunks, keyed chunk_idx * 2^16 +
+    chunk value (one column to window and group on) -- the
+    oracle CTEs' ``chunks``.  Built on UNSORTED signatures:
+    dedup_simhash's presentation orderBy would add a global range
+    exchange for nothing."""
     sig = simhash_sigs_df(read_table(spark, sf_dir, "documents", spread=True))
-    # single join key = chunk_idx * 2^16 + chunk_val: one column to
-    # window over AND to join on (shuffle partitioning reused)
-    chunks = sig.select(
+    return sig.select(
         "doc_id",
         "simhash",
         F.explode(
@@ -619,50 +620,40 @@ def dedup_simhash_pairs(
             )
         ).alias("chunk_key"),
     )
-    bucket_n = F.count("*").over(Window.partitionBy("chunk_key"))
-    # materialized once per invocation (eager localCheckpoint) above
-    # the barrier_pays crossover: the self-join would otherwise run
-    # the Arrow signature pass + chunk window TWICE, once per alias
-    # ((doc_id, simhash, chunk_key) is the lightweight proxy, 4 rows
-    # per doc).  localCheckpoint, not persist: the CacheManager
-    # matches persisted plans across invocations.
-    capped = (
-        chunks.withColumn("bucket_n", bucket_n)
-        .filter(F.col("bucket_n") <= bucket_cap)
-        .select("doc_id", "simhash", "chunk_key")
+
+
+def dedup_simhash_pairs(spark, sf_dir):
+    """Near-dup candidate pairs from the 64-bit SimHash WITHOUT an
+    all-pairs scan: split the signature into 4 x 16-bit chunks -- by
+    pigeonhole, any pair within Hamming distance <= 3 agrees on at
+    least one whole chunk -- pair the documents inside each chunk
+    bucket (:func:`_in_bucket_pairs`, carrying the signature), then
+    verify exact Hamming distance columnar with bit_count(a XOR b).
+    65,536 possible values per chunk index (vs 256 for the old byte
+    chunks) keep buckets thin as the corpus grows, and -- same skew
+    guard as :func:`dedup_minhash_lsh` -- buckets larger than
+    ``BUCKET_CAP`` pair not at all: membership in a flood bucket means
+    near-exact duplication, which the exact-dedup pass already
+    resolves linearly.  The DuckDB oracle applies the SAME cap, so
+    parity holds on flood corpora."""
+    pairs = _in_bucket_pairs(
+        _simhash_chunks(spark, sf_dir),
+        ["chunk_key"],
+        BUCKET_CAP,
+        "simhash",
     )
-    if barrier_pays(n_docs):
-        # the re-spread restores full parallelism for the in-bucket
-        # pair join (the checkpointed frame keeps the window's
-        # AQE-coalesced ~1-partition layout) at the cost of one tiny
-        # proxy shuffle, which the chunk-keyed join then reuses
-        capped = capped.localCheckpoint().repartition(
-            spark.sparkContext.defaultParallelism, "chunk_key"
-        )
-    a = capped.alias("a")
-    b = capped.alias("b")
     hamming = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
     ).cast("int")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_key") == F.col("b.chunk_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+        pairs.select("doc_a", "doc_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
         .orderBy("doc_a", "doc_b")
     )
 
 
-def _simhash_pairs_sql(max_hamming: int = 3) -> str:
-    return f"""
+DEDUP_SIMHASH_PAIRS_SQL = f"""
 WITH {_simhash_ctes()}, chunks AS (
   SELECT doc_id, simhash,
          ((simhash >> (16 * i)) & 65535) + i * 65536 AS chunk_key
@@ -679,53 +670,40 @@ SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
 FROM capped a JOIN capped b
   ON a.chunk_key = b.chunk_key
  AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 ORDER BY doc_a, doc_b
 """
 
 
-DEDUP_SIMHASH_PAIRS_SQL = _simhash_pairs_sql()
-
-
-def simhash_chunk_stats(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
+def simhash_chunk_stats(spark, sf_dir):
     """Monitoring companion to the SimHash chunk-bucket cap (round 5;
     mirrors :func:`minhash_band_stats` / ``emb_bucket_stats``):
     chunk-bucket occupancy, how many buckets/docs the cap drops, and
     the surviving-candidate upper bound + ratio -- the number an
     operator watches to see a boilerplate flood before it sees a slow
-    pairing join.  O(buckets) frame, no pair materialization."""
-    sig = simhash_sigs_df(read_table(spark, sf_dir, "documents", spread=True))
-    chunks = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.shiftright("simhash", 16 * i)
-                        .bitwiseAND(F.lit(65535))
-                        + F.lit(i * 65536)
-                    ).cast("long")
-                    for i in range(4)
-                ]
-            )
-        ).alias("chunk_key"),
+    pairing stage.  O(buckets) frame, no pair materialization."""
+    counts = (
+        _simhash_chunks(spark, sf_dir)
+        .groupBy("chunk_key")
+        .agg(F.count("*").alias("bucket_n"))
     )
-    counts = chunks.groupBy("chunk_key").agg(F.count("*").alias("bucket_n"))
     n_docs = F.sum("bucket_n") / 4  # each doc contributes 4 chunk rows
     cand_bound = F.sum(
         F.when(
-            F.col("bucket_n") <= bucket_cap,
+            F.col("bucket_n") <= BUCKET_CAP,
             F.col("bucket_n") * (F.col("bucket_n") - 1) / 2,
         ).otherwise(0)
     ).cast("bigint")
     return counts.agg(
         F.count("*").alias("n_buckets"),
         F.max("bucket_n").alias("max_bucket"),
-        F.sum(F.when(F.col("bucket_n") > bucket_cap, 1).otherwise(0)).alias(
+        F.sum(F.when(F.col("bucket_n") > BUCKET_CAP, 1).otherwise(0)).alias(
             "buckets_dropped"
         ),
         F.sum(
-            F.when(F.col("bucket_n") > bucket_cap, F.col("bucket_n")).otherwise(0)
+            F.when(
+                F.col("bucket_n") > BUCKET_CAP, F.col("bucket_n")
+            ).otherwise(0)
         ).alias("docs_in_dropped"),
         cand_bound.alias("cand_pairs_bound"),
         F.round(
@@ -778,9 +756,7 @@ def shingle_sets_df(docs_in: DataFrame) -> DataFrame:
     return doc_stage(docs_in, sets, "sh array<string>, n_sh int")
 
 
-def dedup_minhash_verified(
-    spark, sf_dir, threshold: float = 0.5, bucket_cap: int = BUCKET_CAP
-):
+def dedup_minhash_verified(spark, sf_dir):
     """The complete text near-dup hierarchy in one operator: MinHash-
     LSH candidate pairs (banded, bucket-capped, linear) -> EXACT
     n-gram Jaccard verification on candidates only -- the production
@@ -806,7 +782,7 @@ def dedup_minhash_verified(
 
     n_docs = read_table(spark, sf_dir, "documents").count()  # metadata count
     if barrier_pays(n_docs):
-        pairs = _minhash_pairs(spark, sf_dir, bucket_cap).localCheckpoint()
+        pairs = _minhash_pairs(spark, sf_dir).localCheckpoint()
         cand_ids = (
             pairs.select(F.col("doc_a").alias("doc_id"))
             .union(pairs.select(F.col("doc_b").alias("doc_id")))
@@ -820,7 +796,7 @@ def dedup_minhash_verified(
         # below the crossover the three barrier jobs cost more than
         # the corpus passes they save (measured): keep the direct
         # lazy shape
-        pairs = _minhash_pairs(spark, sf_dir, bucket_cap)
+        pairs = _minhash_pairs(spark, sf_dir)
         sets = shingle_sets_df(read_table(spark, sf_dir, "documents"))
     a = sets.select(
         F.col("doc_id").alias("doc_a"),
@@ -840,14 +816,12 @@ def dedup_minhash_verified(
         pairs.join(a, "doc_a")
         .join(b, "doc_b")
         .select("doc_a", "doc_b", jacc.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
 
 
-def _minhash_verified_sql(
-    threshold: float = 0.5, n_rows: int | None = None
-) -> str:
+def _minhash_verified_sql(n_rows: int | None = None) -> str:
     return f"""
 WITH {_minhash_pairs_ctes(n_rows)}, sets AS (
   SELECT doc_id, list_distinct({_SHINGLES_DUCK}) AS sh
@@ -864,7 +838,7 @@ WITH {_minhash_pairs_ctes(n_rows)}, sets AS (
   JOIN sized b ON b.doc_id = p.doc_b
 )
 SELECT doc_a, doc_b, jaccard FROM verified
-WHERE jaccard >= {threshold} ORDER BY doc_a, doc_b
+WHERE jaccard >= {JACCARD_THRESHOLD} ORDER BY doc_a, doc_b
 """
 
 
@@ -880,7 +854,7 @@ DEDUP_MINHASH_VERIFIED_SQL = _minhash_verified_sql()
 INCR_SPLIT_MOD = 5
 
 
-def dedup_incremental(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
+def dedup_incremental(spark, sf_dir):
     """Dedup a NEW batch against an EXISTING corpus -- the production
     shape of every recurring crawl ingest: the training set is already
     deduplicated, so each incoming document only needs (a) an exact
@@ -920,7 +894,7 @@ def dedup_incremental(spark, sf_dir, bucket_cap: int = BUCKET_CAP):
     ex_capped = (
         minhash_bands_df(existing, banding)
         .withColumn("bn", F.count("*").over(Window.partitionBy("band_key")))
-        .filter(F.col("bn") <= bucket_cap)
+        .filter(F.col("bn") <= BUCKET_CAP)
         .select(F.col("doc_id").alias("ex_id"), "band_key")
     )
     return _probe(
@@ -965,12 +939,7 @@ def _probe(
     )
 
 
-def _incremental_sql(
-    n_rows: int | None = None, bucket_cap: int = BUCKET_CAP
-) -> str:
-    # bucket_cap is threaded like n_rows (ADVICE r6): any test that
-    # runs dedup_incremental with a non-default cap must regenerate
-    # its oracle with the SAME cap or parity silently breaks
+def _incremental_sql(n_rows: int | None = None) -> str:
     return f"""
 WITH {_minhash_pairs_ctes(n_rows)},
 ex_side AS (
@@ -980,7 +949,7 @@ ex_side AS (
     SELECT doc_id, band_key,
            count(*) OVER (PARTITION BY band_key) AS bn
     FROM ex_side)
-  WHERE bn <= {bucket_cap}
+  WHERE bn <= {BUCKET_CAP}
 ), inc_side AS (
   SELECT doc_id, band_key FROM stacked WHERE doc_id % {INCR_SPLIT_MOD} = 0
 ), near AS (
@@ -1016,6 +985,7 @@ DEDUP_INCREMENTAL_SQL = _incremental_sql()
 # ------------------------------------------------------------------ #
 
 DEDUP_INDEX_META = "index_meta.json"
+INDEX_BUCKETS = 8  # bucket count of every index table
 
 # index sub-dir -> (catalog letter, bucket column, DDL; {dt} = doc_id type)
 _INDEX_TABLES = {
@@ -1181,7 +1151,6 @@ def build_dedup_index(
     index_dir: str,
     banding: "tuple[int, int] | None" = None,
     bucket_cap: int = BUCKET_CAP,
-    n_buckets: int = 8,
     scrubbed: bool = False,
     dup_span_scrubbed: bool = False,
     dup_grams: "DataFrame | None" = None,
@@ -1234,7 +1203,7 @@ def build_dedup_index(
     policy = {
         "banding": banding,
         "bucket_cap": bucket_cap,
-        "n_buckets": n_buckets,
+        "n_buckets": INDEX_BUCKETS,
         "scrubbed": scrubbed,
         "dup_span_scrubbed": dup_span_scrubbed,
     }
@@ -1375,10 +1344,12 @@ def _ckpt(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
     return df.checkpoint(eager=True)
 
 
+# round bound of the star fallback: far above its O(log^2 n) need
+STAR_MAX_ROUNDS = 30
+
+
 def _star_components(
-    pairs: DataFrame,
-    max_rounds: int = 30,
-    checkpoint_dir: str | None = None,
+    pairs: DataFrame, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -1404,7 +1375,7 @@ def _star_components(
         .distinct()
     )
     e = _ckpt(e, checkpoint_dir)
-    for _ in range(max_rounds):
+    for _ in range(STAR_MAX_ROUNDS):
         # large-star over the full neighborhood (both orientations);
         # unionByName -- a positional union would silently undo the swap
         nbrs = e.unionByName(
@@ -1446,9 +1417,9 @@ def _star_components(
             break
     else:
         raise RuntimeError(
-            f"_star_components: edge set still moving after {max_rounds} "
-            "alternating rounds -- should be impossible for any graph "
-            "(O(log^2 n) bound); investigate the edge input"
+            "_star_components: edge set still moving after "
+            f"{STAR_MAX_ROUNDS} alternating rounds -- should be impossible "
+            "for any graph (O(log^2 n) bound); investigate the edge input"
         )
     labels = e.select(
         F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id")
@@ -1560,7 +1531,7 @@ def resolve_components(
     return state.select("doc_id", "cluster_id")
 
 
-def dedup_clusters(spark, sf_dir, max_iters: int = 20):
+def dedup_clusters(spark, sf_dir):
     """(doc_id, cluster_id, keep) for every document: connected
     components (:func:`resolve_components`) over the MinHash-LSH
     candidate pairs, cluster_id = the lexicographic min doc_id of the
@@ -1569,7 +1540,7 @@ def dedup_clusters(spark, sf_dir, max_iters: int = 20):
     for untouched docs)."""
     # unsorted pairs: no global sort paid
     pairs = _minhash_pairs(spark, sf_dir)
-    labels = resolve_components(pairs, max_iters)
+    labels = resolve_components(pairs)
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     return (
         docs.join(labels, "doc_id", "left")

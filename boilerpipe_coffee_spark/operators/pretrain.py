@@ -154,8 +154,6 @@ def emit_chunks(training: DataFrame, context_len: int | None = None) -> DataFram
 
 def near_dup_keep(
     features: DataFrame,
-    bucket_cap: int = 64,
-    max_iters: int = 20,
     checkpoint_dir: str | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
@@ -182,10 +180,10 @@ def near_dup_keep(
     # summary) resolves the adaptive banding without an extra pass;
     # None falls back to a count inside minhash_candidate_pairs
     survivors = features.filter(F.col("keep")).select("doc_id", "text")
-    pairs = minhash_candidate_pairs(survivors, bucket_cap, n_docs=n_docs)
+    pairs = minhash_candidate_pairs(survivors, n_docs=n_docs)
     # checkpoint_dir: reliable lineage cuts for the component loop on a
     # real cluster (survives executor loss); local default stays fast
-    labels = resolve_components(pairs, max_iters, checkpoint_dir)
+    labels = resolve_components(pairs, checkpoint_dir=checkpoint_dir)
     # a sort-merge join, never a broadcast of the (checkpointed, hence
     # small-looking) labels: the output then stays hash-partitioned by
     # doc_id, so a doc_id-bucketed write of it opens one writer per

@@ -46,6 +46,10 @@ def barrier_pays(n_rows: int) -> bool:
     """Cost model for the eager ``localCheckpoint`` barriers that
     de-duplicate multi-consumer Arrow stages (guide §5: caching is
     only worth it when recomputation costs more than the barrier).
+    One caller: ``dedup.dedup_minhash_verified``, whose pairs and
+    shingle sets each feed two consumers.  The LSH pair generators
+    need no barrier: they pair inside the bucket row, so their
+    signature pass has one consumer at every scale.
     A barrier costs a fixed ~0.2–0.5 s of extra Spark jobs; what it
     saves is a whole corpus signature/set pass, whose cost scales
     with rows.  Interleaved A/B measured the crossover between 5k

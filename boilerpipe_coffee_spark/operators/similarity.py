@@ -176,7 +176,7 @@ FROM b ORDER BY vec_id
 ANN_LSH_SQL = _ann_sql()
 
 
-def dedup_embedding_cosine(spark, sf_dir, threshold: float = 0.45):
+def dedup_embedding_cosine(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs -- BRUTE-FORCE BASELINE
     (O(N^2) non-equi self-join), kept only as the recall yardstick and
     oracle anchor.  The production path is
@@ -198,7 +198,7 @@ def dedup_embedding_cosine(spark, sf_dir, threshold: float = 0.45):
             F.col("b.vec_id").alias("vec_b"),
             cos.alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= EMB_NEARDUP_THRESHOLD)
         .orderBy("vec_a", "vec_b")
     )
 
@@ -433,28 +433,41 @@ def _gather_verify_df(emb, cand):
     return cand.mapInPandas(verify_fn, "vec_a bigint, vec_b bigint, raw double")
 
 
-def dedup_embedding_lsh_pairs(
-    spark,
-    sf_dir,
-    threshold: float = EMB_NEARDUP_THRESHOLD,
-    bucket_cap: int = EMB_BUCKET_CAP,
-    n_rows: int | None = None,
-):
+def _emb_buckets(spark, sf_dir) -> "tuple[DataFrame, int, DataFrame]":
+    """(vectors, n_rows, tb) for the embedding-LSH family: ``tb`` is
+    the (vec_id, table_idx, bucket) rows, T per vector, at the
+    :func:`emb_banding` for ``n_rows`` -- the oracle CTEs' ``tb``.
+    One Arrow-batched numpy matmul per batch computes all T*B signed
+    projections; ids only (the 64-dim payload does NOT ride through
+    the explode).  ``n_rows`` is a metadata-cheap count (parquet
+    footer statistics, taken on an UN-spread read so the count never
+    executes the scan-floor repartition)."""
+    emb = _vectors(spark, sf_dir)
+    n_rows = read_table(spark, sf_dir, "embeddings").count()
+    b_planes, t_tables = emb_banding(n_rows)
+    tb = emb.select(
+        "vec_id",
+        F.posexplode(
+            _bucket_udf(t_tables, b_planes)("v")
+        ).alias("table_idx", "bucket"),
+    )
+    return emb, n_rows, tb
+
+
+def dedup_embedding_lsh_pairs(spark, sf_dir):
     """Embedding near-duplicate pairs at scale: hyperplane-LSH
     candidate generation + exact cosine verify -- the production twin
     of :func:`dedup_embedding_cosine` (which is O(N^2)).
 
     Plan shape (all linear in corpus size):
-      1. one scan computes T*B signed projections per vector (one
-         Arrow-batched numpy matmul) and emits (vec_id, table_idx,
-         bucket) -- T rows/vector, ids only (the 64-dim payload does
-         NOT ride through the explode);
+      1. one scan emits the (vec_id, table_idx, bucket) rows of
+         :func:`_emb_buckets`;
       2. bucket sizes via a window on (table_idx, bucket): ONE shuffle
          whose hash partitioning the in-bucket self-join then reuses;
-         buckets over ``bucket_cap`` are dropped (vector floods are
-         exact-dup territory -- see EMB_BUCKET_CAP note);
+         buckets over ``EMB_BUCKET_CAP`` are dropped (vector floods
+         are exact-dup territory -- see the EMB_BUCKET_CAP note);
       3. in-bucket join emits DISTINCT (vec_a < vec_b) id pairs;
-      4. exact verify keeps cosine >= threshold (vectorized; rounded
+      4. exact verify keeps cosine >= the threshold (vectorized; rounded
          4dp JVM-side for oracle parity).  Strategy is size-gated:
          under EMB_BCAST_VERIFY_MAX_BYTES the whole vector matrix
          broadcasts and pairs verify by gather (r6: no vector-carrying
@@ -471,20 +484,7 @@ def dedup_embedding_lsh_pairs(
     adversarial flood corpus) pin this for the committed data."""
     from pyspark.sql import Window
 
-    emb = _vectors(spark, sf_dir)
-    # adaptive banding: one metadata-cheap count (parquet footer
-    # statistics -- no data scan; taken on an UN-spread read so the
-    # count never executes the scan-floor repartition) picks (B, T)
-    # via the shared policy
-    if n_rows is None:
-        n_rows = read_table(spark, sf_dir, "embeddings").count()
-    b_planes, t_tables = emb_banding(n_rows)
-    tb = emb.select(
-        "vec_id",
-        F.posexplode(
-            _bucket_udf(t_tables, b_planes)("v")
-        ).alias("table_idx", "bucket"),
-    )
+    emb, n_rows, tb = _emb_buckets(spark, sf_dir)
     bucket_n = F.count("*").over(Window.partitionBy("table_idx", "bucket"))
     # NOT checkpointed (r9, measured): the self-join does run the
     # projection UDF + window once per alias, but both passes are
@@ -494,9 +494,13 @@ def dedup_embedding_lsh_pairs(
     # frame's post-AQE layout: plain localCheckpoint +45%, checkpoint
     # + bucket-keyed repartition ~6x worse.  The window's own hash
     # partitioning feeding the join directly is the fastest shape.
+    # Nor paired in-row like the text families (dedup._in_bucket_pairs,
+    # measured: identical rows, but 2.12 -> 2.37 s at sf0.1, local[4],
+    # 7 warm passes per side; not profiled): buckets of up to 512 ids
+    # build arrays of up to ~130k pairs in interpreted array lambdas.
     capped = (
         tb.withColumn("bucket_n", bucket_n)
-        .filter(F.col("bucket_n") <= bucket_cap)
+        .filter(F.col("bucket_n") <= EMB_BUCKET_CAP)
         .select("vec_id", "table_idx", "bucket")
     )
     a = capped.alias("a")
@@ -537,17 +541,12 @@ def dedup_embedding_lsh_pairs(
         )
     return (
         raw.select("vec_a", "vec_b", F.round("raw", 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= EMB_NEARDUP_THRESHOLD)
         .orderBy("vec_a", "vec_b")
     )
 
 
-def emb_bucket_stats(
-    spark,
-    sf_dir,
-    bucket_cap: int = EMB_BUCKET_CAP,
-    n_rows: int | None = None,
-):
+def emb_bucket_stats(spark, sf_dir):
     """Monitoring companion to the embedding-LSH skew guard (mirrors
     dedup.minhash_band_stats): per-table bucket-size aggregates, how
     many buckets/vectors the cap would drop, and -- round 5 -- the
@@ -558,24 +557,14 @@ def emb_bucket_stats(
     corpus grows (it is an upper bound on distinct candidate pairs:
     cross-table duplicates are not collapsed here -- bucket-local
     aggregation keeps the monitor O(buckets), no pair materialization)."""
-    emb = _vectors(spark, sf_dir)
-    if n_rows is None:
-        # un-spread metadata count, as in dedup_embedding_lsh_pairs
-        n_rows = read_table(spark, sf_dir, "embeddings").count()
-    b_planes, t_tables = emb_banding(n_rows)
-    tb = emb.select(
-        "vec_id",
-        F.posexplode(
-            _bucket_udf(t_tables, b_planes)("v")
-        ).alias("table_idx", "bucket"),
-    )
+    _, n_rows, tb = _emb_buckets(spark, sf_dir)
     counts = tb.groupBy("table_idx", "bucket").agg(
         F.count("*").alias("bucket_n")
     )
     total_pairs = n_rows * (n_rows - 1) // 2
     cand_bound = F.sum(
         F.when(
-            F.col("bucket_n") <= bucket_cap,
+            F.col("bucket_n") <= EMB_BUCKET_CAP,
             F.col("bucket_n") * (F.col("bucket_n") - 1) / 2,
         ).otherwise(0)
     ).cast("bigint")
@@ -583,12 +572,12 @@ def emb_bucket_stats(
         F.count("*").alias("n_buckets"),
         F.max("bucket_n").alias("max_bucket"),
         F.sum(
-            F.when(F.col("bucket_n") > bucket_cap, 1).otherwise(0)
+            F.when(F.col("bucket_n") > EMB_BUCKET_CAP, 1).otherwise(0)
         ).alias("buckets_dropped"),
         F.sum(
-            F.when(F.col("bucket_n") > bucket_cap, F.col("bucket_n")).otherwise(
-                0
-            )
+            F.when(
+                F.col("bucket_n") > EMB_BUCKET_CAP, F.col("bucket_n")
+            ).otherwise(0)
         ).alias("vecs_in_dropped"),
         cand_bound.alias("cand_pairs_bound"),
         F.round(cand_bound / F.lit(max(total_pairs, 1)), 6).alias(
@@ -622,9 +611,7 @@ def _emb_tb_union(n_tables: int, planes_per_table: int) -> str:
     return "\n  UNION ALL\n  ".join(tables)
 
 
-def _emb_bucket_stats_sql(
-    bucket_cap: int = EMB_BUCKET_CAP, n_rows: int = 500
-) -> str:
+def _emb_bucket_stats_sql(n_rows: int = 500) -> str:
     """Oracle for :func:`emb_bucket_stats`, generated for a corpus of
     ``n_rows`` (B/T via the shared :func:`emb_banding`; the module
     constant below is the driver corpus's n=500 instance)."""
@@ -641,14 +628,14 @@ WITH emb AS (
 )
 SELECT count(*) AS n_buckets,
        max(bucket_n) AS max_bucket,
-       sum(CASE WHEN bucket_n > {bucket_cap} THEN 1 ELSE 0 END)::BIGINT
+       sum(CASE WHEN bucket_n > {EMB_BUCKET_CAP} THEN 1 ELSE 0 END)::BIGINT
          AS buckets_dropped,
-       sum(CASE WHEN bucket_n > {bucket_cap} THEN bucket_n ELSE 0 END)::BIGINT
+       sum(CASE WHEN bucket_n > {EMB_BUCKET_CAP} THEN bucket_n ELSE 0 END)::BIGINT
          AS vecs_in_dropped,
-       sum(CASE WHEN bucket_n <= {bucket_cap}
+       sum(CASE WHEN bucket_n <= {EMB_BUCKET_CAP}
                 THEN bucket_n * (bucket_n - 1) / 2 ELSE 0 END)::BIGINT
          AS cand_pairs_bound,
-       round(sum(CASE WHEN bucket_n <= {bucket_cap}
+       round(sum(CASE WHEN bucket_n <= {EMB_BUCKET_CAP}
                       THEN bucket_n * (bucket_n - 1) / 2 ELSE 0 END)
              / {total_pairs}, 6) AS cand_ratio
 FROM bc
@@ -658,11 +645,7 @@ FROM bc
 EMB_BUCKET_STATS_SQL = _emb_bucket_stats_sql()
 
 
-def _emb_lsh_pairs_sql(
-    threshold: float = EMB_NEARDUP_THRESHOLD,
-    bucket_cap: int = EMB_BUCKET_CAP,
-    n_rows: int = 500,
-) -> str:
+def _emb_lsh_pairs_sql(n_rows: int = 500) -> str:
     """Oracle for :func:`dedup_embedding_lsh_pairs`, generated for a
     corpus of ``n_rows`` (B/T via the shared :func:`emb_banding`).
     Tests on custom corpora MUST regenerate with their own n_rows;
@@ -678,7 +661,7 @@ WITH emb AS (
     SELECT vec_id, table_idx, bucket,
            count(*) OVER (PARTITION BY table_idx, bucket) AS bucket_n
     FROM tb)
-  WHERE bucket_n <= {bucket_cap}
+  WHERE bucket_n <= {EMB_BUCKET_CAP}
 ), cand AS (
   SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
   FROM capped a JOIN capped b
@@ -694,7 +677,7 @@ WITH emb AS (
   JOIN emb eb ON eb.vec_id = c.vec_b
 )
 SELECT vec_a, vec_b, cosine FROM verified
-WHERE cosine >= {threshold} ORDER BY vec_a, vec_b
+WHERE cosine >= {EMB_NEARDUP_THRESHOLD} ORDER BY vec_a, vec_b
 """
 
 

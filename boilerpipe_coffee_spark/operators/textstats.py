@@ -790,14 +790,10 @@ def _gram_rows_df(base: DataFrame, w: int) -> DataFrame:
     return doc_stage(base, grams, "pos int, g bigint")
 
 
-def dup_span_frac_df(
-    df: DataFrame,
-    text_col: str = "text",
-    w: int = None,
-) -> DataFrame:
+def dup_span_frac_df(df: DataFrame) -> DataFrame:
     """DataFrame-level core of :func:`dup_span_stats`: per-doc
     cross-document duplicated-window stats over an arbitrary
-    (doc_id, <text_col>) frame — shared by the driver query and the
+    (doc_id, text) frame — shared by the driver query and the
     pipeline ``--max-dup-span-frac`` boilerplate gate.  Works for
     both int and string doc_ids (min/max distinct-docs test only
     needs an ordering).
@@ -815,8 +811,8 @@ def dup_span_frac_df(
 
     from ..functions import TOKENS
 
-    w = w or DUP_SPAN_W
-    base = df.select("doc_id", F.col(text_col).alias("text"))
+    w = DUP_SPAN_W
+    base = df.select("doc_id", "text")
     n_toks = F.size(F.expr(TOKENS))
     sized = base.select(
         "doc_id",
@@ -932,18 +928,15 @@ def dup_span_scrub(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def dup_grams_df(
-    df: DataFrame, text_col: str = "text", w: int = None
-) -> DataFrame:
-    """(doc_id, <text_col>) -> DataFrame[g bigint]: the DISTINCT
-    cross-document duplicated word-``w``-gram hashes of the corpus —
-    the "boilerplate list" the scrub removes.  Map-side-combinable
-    min/max is the ≥2-distinct-docs test (one |tokens|-row shuffle).
+def dup_grams_df(df: DataFrame) -> DataFrame:
+    """(doc_id, text) -> DataFrame[g bigint]: the DISTINCT
+    cross-document duplicated word-``DUP_SPAN_W``-gram hashes of the
+    corpus — the "boilerplate list" the scrub removes.
+    Map-side-combinable min/max is the ≥2-distinct-docs test (one
+    |tokens|-row shuffle).
     Materialized into the dedup index by the pipeline so incremental
     probes can replay the corpus's splice on raw re-fetched text."""
-    w = w or DUP_SPAN_W
-    base = df.select("doc_id", F.col(text_col).alias("text"))
-    return _dup_grams(_gram_rows_df(base, w))
+    return _dup_grams(_gram_rows_df(df.select("doc_id", "text"), DUP_SPAN_W))
 
 
 def _dup_grams(ex: DataFrame) -> DataFrame:
@@ -1038,16 +1031,14 @@ def scrub_one(
 
 def dup_span_scrub_df(
     df: DataFrame,
-    text_col: str = "text",
-    w: int = None,
     normal_form: bool = True,
     grams: "DataFrame | None" = None,
 ) -> DataFrame:
-    """(doc_id, <text_col>) -> (doc_id, n_tokens, removed_tokens,
+    """(doc_id, text) -> (doc_id, n_tokens, removed_tokens,
     scrubbed_text): drop every token position covered by ANY
-    duplicated window (window at pos p covers tokens p..p+w-1;
-    overlapping windows union).  ``n_tokens`` is the PRE-scrub count;
-    post-scrub is ``n_tokens - removed_tokens``.
+    duplicated window (window at pos p covers tokens p..p+w-1, w =
+    ``DUP_SPAN_W``; overlapping windows union).  ``n_tokens`` is the
+    PRE-scrub count; post-scrub is ``n_tokens - removed_tokens``.
 
     ``grams``: the gram-hash set (DataFrame[g]) whose windows to
     splice.  ``None`` derives it from ``df`` itself via
@@ -1074,8 +1065,8 @@ def dup_span_scrub_df(
     gate is the planted byte-equality tests."""
     import pandas as pd
 
-    w = w or DUP_SPAN_W
-    base = df.select("doc_id", F.col(text_col).alias("text"))
+    w = DUP_SPAN_W
+    base = df.select("doc_id", "text")
     ex = _gram_rows_df(base, w)
     if grams is None:
         # already distinct by construction (groupBy g) -- no extra
@@ -1805,9 +1796,9 @@ def pii_scrub_text(col: "F.Column") -> "F.Column":
     return scrubbed
 
 
-def scrub_pii_df(df: DataFrame, text_col: str = "text") -> DataFrame:
+def scrub_pii_df(df: DataFrame) -> DataFrame:
     """DataFrame-level redaction stage (round 7): replace every
-    ``PII_CLASSES`` match in ``text_col`` with its placeholder token
+    ``PII_CLASSES`` match in ``text`` with its placeholder token
     (applied in the fixed class order -- the SAME chain the
     ``pii_scrub`` driver query hashes) and append per-class match
     counts ``n_<class>`` measured on the ORIGINAL text.  Pure
@@ -1818,14 +1809,13 @@ def scrub_pii_df(df: DataFrame, text_col: str = "text") -> DataFrame:
     counts = []
     for name, pat, _ in PII_CLASSES:
         counts.append(
-            F.regexp_count(text_col, F.lit(pat))
+            F.regexp_count("text", F.lit(pat))
             .cast("bigint")
             .alias(f"n_{name}")
         )
-    keep_cols = [c for c in df.columns if c != text_col]
+    keep_cols = [c for c in df.columns if c != "text"]
     return df.select(
-        *keep_cols, *counts,
-        pii_scrub_text(F.col(text_col)).alias(text_col),
+        *keep_cols, *counts, pii_scrub_text(F.col("text")).alias("text")
     )
 
 

@@ -28,7 +28,6 @@ def get_spark(
     app_name: str = "boilerpipe-coffee-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 1024,
     extra_conf: dict | None = None,
     periodic_gc: str | None = "30s",
     driver_memory: str | None = None,
@@ -52,7 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")

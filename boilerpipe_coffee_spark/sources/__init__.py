@@ -142,7 +142,7 @@ def read_interleaved_jsonl(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_output(df: DataFrame, target: str, mode: str = "append") -> None:
+def write_output(df: DataFrame, target: str) -> None:
     """Write extraction output.  With Iceberg: ``writeTo(...).append()``
     on a table partitioned by ``bucket(256, doc_id)`` (hidden
     partitioning -> partition pruning on doc_id lookups).  Parquet
@@ -159,7 +159,7 @@ def write_output(df: DataFrame, target: str, mode: str = "append") -> None:
                 F.bucket(256, F.col("doc_id"))
             ).create()
         return
-    df.write.mode(mode).parquet(target)
+    df.write.mode("append").parquet(target)
 
 
 def write_bucketed(
@@ -168,25 +168,24 @@ def write_bucketed(
     path: str,
     bucket_col: str,
     n_buckets: int = 8,
-    sort: bool = True,
 ) -> None:
     """Bucketed parquet sink: co-locates rows by ``hash(bucket_col)``
-    at WRITE time so later equi-joins and aggregations on that key
-    scan pre-partitioned (and pre-sorted) data and plan with NO
+    at WRITE time, sorted by it within each bucket, so later equi-joins
+    and aggregations on that key scan pre-partitioned (and pre-sorted)
+    data and plan with NO
     exchange -- the parquet-table analogue of the Iceberg
     ``bucket(256, doc_id)`` hidden partitioning :func:`write_output`
     uses.  At 100 TB this converts every repeated join against the
     table from a full shuffle into a local merge; pay the partitioning
     cost once at ingest, not per query (plan-asserted in
     tests/test_plans.py)."""
-    writer = (
+    (
         df.write.mode("overwrite")
         .option("path", path)
         .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
 
 
 def register_bucketed(
@@ -195,7 +194,6 @@ def register_bucketed(
     path: str,
     bucket_col: str,
     n_buckets: int = 8,
-    sort: bool = True,
     schema: str | None = None,
 ) -> DataFrame:
     """Re-attach bucketing metadata to files :func:`write_bucketed`
@@ -206,7 +204,7 @@ def register_bucketed(
     its joins/aggregations can plan exchange-free.  DROP/CREATE of an
     external LOCATION table never touches the data files.  The
     declared spec must match what was written (same bucket_col /
-    n_buckets / sort) -- Spark trusts the DDL.
+    n_buckets) -- Spark trusts the DDL.
 
     ``schema`` (a DDL column list) skips file-based inference -- a
     legitimately EMPTY table (e.g. a dedup index whose band buckets
@@ -219,11 +217,10 @@ def register_bucketed(
             f"`{f.name}` {f.dataType.simpleString()}"
             for f in df.schema.fields
         )
-    sorted_by = f"SORTED BY (`{bucket_col}`) " if sort else ""
     spark.sql(f"DROP TABLE IF EXISTS `{table}`")
     spark.sql(
         f"CREATE TABLE `{table}` ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{bucket_col}`) {sorted_by}"
+        f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
         f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
     )
     return spark.table(table)

@@ -53,23 +53,17 @@ def extract_stream(
     return extract(docs, extractor)
 
 
-def write_stream(
-    result: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
-):
+def write_stream(result: DataFrame, out_dir: str, checkpoint_dir: str):
     """Parquet sink with checkpoint; availableNow processes the backlog
     then stops (the streaming analogue of the batch resume loop)."""
-    writer = (
+    return (
         result.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ------------------------------------------------------------------ #
@@ -78,12 +72,10 @@ def write_stream(
 
 
 def windowed_event_counts(
-    events: DataFrame,
-    window_dur: str = "1 hour",
-    watermark_delay: str = "0 seconds",
+    events: DataFrame, watermark_delay: str = "0 seconds"
 ) -> DataFrame:
-    """Tumbling event-time windows over a (possibly streaming) events
-    frame.  The watermark bounds state: windows older than
+    """Tumbling one-hour event-time windows over a (possibly
+    streaming) events frame.  The watermark bounds state: windows older than
     ``max(event time) - delay`` are finalized and emitted (append
     mode), later-arriving data for them is dropped -- the standard
     late-data contract."""
@@ -93,7 +85,7 @@ def windowed_event_counts(
         # round-trip unchanged.
         events.withColumn("ts", F.col("ts").cast("timestamp"))
         .withWatermark("ts", watermark_delay)
-        .groupBy(F.window("ts", window_dur).alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
@@ -152,54 +144,10 @@ def dedup_first_seen(docs: DataFrame) -> DataFrame:
     )
 
 
-def probe_index_foreach_batch(
-    stream_df: DataFrame, index_dir: str, out_dir: str, ckpt_dir: str
-):
-    """Stream-ingest against a MATERIALIZED dedup index via
-    ``foreachBatch`` — the escape hatch for index representations a
-    stateless stream-static join cannot probe: a ``dup_span_scrubbed``
-    index needs the dup_grams splice REPLAY on the probe side, which
-    aggregates per batch (collect of duplicated positions), illegal
-    in an append-mode streaming plan.  Each micro-batch runs the
-    exact batch operator (``probe_dedup_index`` — splice + PII replay
-    + asymmetric bucketed joins) and appends its decisions; drained
-    availableNow output equals the one-shot batch probe row-for-row
-    (micro-batch boundaries don't interact: the probe is per-doc
-    against static tables).
-
-    Replays after a mid-stream failure re-run at most one committed
-    epoch (parquet append is at-least-once across sink retries);
-    downstream consumers fold by doc_id, which is idempotent here
-    because every epoch emits identical rows for a given doc."""
-
-    def _probe(batch_df: DataFrame, _epoch_id: int) -> None:
-        from ..operators.dedup import probe_dedup_index
-
-        probe_dedup_index(
-            batch_df.sparkSession, batch_df, index_dir
-        ).write.mode("append").parquet(out_dir)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_probe)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def run_available_now(result: DataFrame, out_dir: str, checkpoint_dir: str):
     """Run a streaming frame to a parquet sink until the backlog is
     drained; blocks until finished."""
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = write_stream(result, out_dir, checkpoint_dir)
     q.awaitTermination()
     return q
 

@@ -8,9 +8,14 @@ import os
 
 from boilerpipe_coffee_spark.core.document import TextBlock, TextDocument
 from boilerpipe_coffee_spark.core.extractors import UNFILTERED, document_from_html
-from boilerpipe_coffee_spark.fixtures import example_text
+from boilerpipe_coffee_spark.fixtures import LOREM
 
 GOLDEN_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden")
+
+
+def example_text(n: int) -> str:
+    """TestHelper.exampleText: first n lorem words."""
+    return " ".join(LOREM[:n])
 
 
 def document_with_parameters(words, num_anchor_words=None, is_content=None, labels=None):

@@ -18,10 +18,11 @@ FLOOD_TEXT = (
 
 
 def _write_documents(tmp_path, rows):
-    """rows: list of (doc_id:int, text:str)."""
+    """rows: list of (doc_id, text:str); int ids are written as int64,
+    str ids as string."""
     table = pa.table(
         {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "doc_id": pa.array([r[0] for r in rows]),
             "text": pa.array([r[1] for r in rows], pa.string()),
             "lang": pa.array(["en"] * len(rows), pa.string()),
             "source": pa.array(["flood"] * len(rows), pa.string()),
@@ -169,6 +170,125 @@ def test_simhash_cap_parity_with_oracle_on_flood(spark, simhash_flood_dir):
     want = sorted(tuple(r) for r in con.sql(DEDUP_SIMHASH_PAIRS_SQL).fetchall())
     con.close()
     assert got == want
+
+
+def _reference_simhash(text):
+    """Pure-Python 64-bit SimHash, signed: over the distinct token set,
+    bit b of the md5 hex digits 1-8 votes on bit b, digits 9-16 on bit
+    32 + b; a bit is set when its vote is positive."""
+    import hashlib
+    import re
+
+    toks = {t for t in re.split("[^a-z0-9]+", text.lower()) if t}
+    if not toks:
+        return None
+    votes = [0] * 64
+    for t in toks:
+        v = int(hashlib.md5(t.encode()).hexdigest()[:16], 16)
+        word = (v >> 32) | ((v & 0xFFFFFFFF) << 32)
+        for b in range(64):
+            votes[b] += 1 if (word >> b) & 1 else -1
+    val = sum(1 << b for b in range(64) if votes[b] > 0)
+    return val - (1 << 64) if val >> 63 else val
+
+
+def _hamming(a, b):
+    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+
+def _reference_simhash_pairs(rows):
+    """(doc_a, doc_b, hamming) for every two rows, doc_a < doc_b, that
+    share a 16-bit chunk bucket of at most BUCKET_CAP rows and lie
+    within Hamming distance 3."""
+    from collections import defaultdict
+
+    from boilerpipe_coffee_spark.operators.dedup import BUCKET_CAP
+
+    buckets = defaultdict(list)
+    for doc_id, text in rows:
+        sig = _reference_simhash(text)
+        if sig is None:
+            continue
+        for i in range(4):
+            buckets[((sig >> 16 * i) & 0xFFFF) + i * 65536].append((doc_id, sig))
+    return {
+        (a, b, _hamming(sa, sb))
+        for members in buckets.values()
+        if len(members) <= BUCKET_CAP
+        for a, sa in members
+        for b, sb in members
+        if a < b and _hamming(sa, sb) <= 3
+    }
+
+
+def _variant_at(base, distance):
+    """``base`` plus two extra tokens, whose SimHash lies exactly
+    ``distance`` bits from base's and still shares a whole 16-bit
+    chunk with it, so only the Hamming filter can tell the pair."""
+    sig = _reference_simhash(base)
+    for k in range(5000):
+        text = f"{base} extra{k} extra{k + 7}"
+        other = _reference_simhash(text)
+        shared = any(
+            (sig >> 16 * i) & 0xFFFF == (other >> 16 * i) & 0xFFFF
+            for i in range(4)
+        )
+        if _hamming(sig, other) == distance and shared:
+            return text
+    raise AssertionError(f"no distance-{distance} variant found")
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_simhash_pairs_match_brute_force(spark, tmp_path, id_type):
+    """Exact (doc_a, doc_b, hamming) set equality with the pure-Python
+    reference on a written corpus: a bucket of exactly ``BUCKET_CAP``
+    copies pairs in full, ``BUCKET_CAP + 1`` copies pair not at all, a
+    repeated doc_id row never pairs with itself, and a pair 4 bits
+    apart is dropped although it shares a chunk."""
+    import random
+
+    from boilerpipe_coffee_spark.operators.dedup import (
+        BUCKET_CAP,
+        dedup_simhash_pairs,
+    )
+
+    rng = random.Random(5)
+    vocab = ["v%03d" % i for i in range(400)]
+    rows = []
+    for i in range(20):  # families: base + variants 3 and 4 bits away
+        base = " ".join(rng.sample(vocab, 30))
+        rows.append((i, base))
+        if i % 4 == 0:
+            rows.append((100 + i, _variant_at(base, 3)))
+            rows.append((200 + i, _variant_at(base, 4)))
+    at_cap = " ".join(rng.sample(vocab, 25)) + " capped bucket"
+    flood = " ".join(rng.sample(vocab, 25)) + " flood bucket"
+    rows += [(1000 + k, at_cap) for k in range(BUCKET_CAP)]
+    rows += [(2000 + k, flood) for k in range(BUCKET_CAP + 1)]
+    rows += [rows[0], (3000, "")]  # repeated doc_id row; no tokens
+    if id_type == "string":
+        rows = [("doc-%05d" % i, t) for i, t in rows]
+    want = _reference_simhash_pairs(rows)
+    got = {
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in dedup_simhash_pairs(
+            spark, _write_documents(tmp_path, rows)
+        ).collect()
+    }
+    assert got == want
+    ids = (lambda i: "doc-%05d" % i) if id_type == "string" else (lambda i: i)
+    pairs = {(a, b) for a, b, _ in got}
+    capped = {
+        (ids(1000 + x), ids(1000 + y))
+        for x in range(BUCKET_CAP)
+        for y in range(x + 1, BUCKET_CAP)
+    }
+    assert capped <= pairs
+    assert not any(ids(2000) <= a <= ids(2064) for pair in pairs for a in pair)
+    assert all(a != b for a, b in pairs)
+    for i in range(0, 20, 4):
+        assert (ids(i), ids(100 + i), 3) in got
+        assert (ids(i), ids(200 + i)) not in pairs
 
 
 def test_minhash_verified_subset_of_brute_force(spark):

@@ -468,6 +468,31 @@ def test_empty_dup_grams_index_probes_and_reads(spark, tmp_path_factory):
     assert n == 0
 
 
+def probe_index_foreach_batch(stream_df, index_dir, out_dir, ckpt_dir):
+    """Stream-ingest against a MATERIALIZED dedup index via
+    ``foreachBatch`` — the escape hatch for index representations a
+    stateless stream-static join cannot probe: a ``dup_span_scrubbed``
+    index needs the dup_grams splice REPLAY on the probe side, which
+    aggregates per batch (collect of duplicated positions), illegal
+    in an append-mode streaming plan.  Each micro-batch runs the
+    exact batch operator (``probe_dedup_index`` — splice + PII replay
+    + asymmetric bucketed joins) and appends its decisions."""
+
+    def _probe(batch_df, _epoch_id):
+        probe_dedup_index(
+            batch_df.sparkSession, batch_df, index_dir
+        ).write.mode("append").parquet(out_dir)
+
+    q = (
+        stream_df.writeStream.foreachBatch(_probe)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def test_foreach_batch_probe_equals_batch_probe(spark, tmp_path_factory):
     """Streaming ingestion against a SCRUBBED index: the dup_grams
     splice replay aggregates per batch, so stream-static joins can't
@@ -479,7 +504,6 @@ def test_foreach_batch_probe_equals_batch_probe(spark, tmp_path_factory):
         dup_grams_df,
         dup_span_scrub_df,
     )
-    from boilerpipe_coffee_spark.streaming import probe_index_foreach_batch
 
     base = str(tmp_path_factory.mktemp("dix_stream_probe"))
     boiler = " ".join(f"fs{i}" for i in range(DUP_SPAN_W + 6))

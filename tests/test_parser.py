@@ -6,9 +6,8 @@ from boilerpipe_coffee_spark.core.document import (
     TextBlock,
 )
 from boilerpipe_coffee_spark.core.extractors import document_from_html
-from boilerpipe_coffee_spark.fixtures import example_text
 
-from helpers import document_from_template
+from helpers import document_from_template, example_text
 
 
 def test_text_densities():  # Tests.coffee:20-35

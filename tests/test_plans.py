@@ -234,6 +234,20 @@ def test_simhash_pairs_plan_has_no_presentation_sort_inside(spark):
     assert "chunk_key" in plan  # join keyed on the combined chunk key
 
 
+def test_simhash_pairs_plan_runs_signatures_once(spark):
+    """SimHash pairs inside each capped chunk bucket, through the same
+    generator as MinHash: the Arrow signature pass has ONE consumer,
+    so the plan has exactly one MapInPandas and no join keyed on
+    chunk_key (a chunk self-join re-runs the pass once per alias)."""
+    import re
+
+    from boilerpipe_coffee_spark.operators.dedup import dedup_simhash_pairs
+
+    plan = _plan(dedup_simhash_pairs(spark, SF))
+    assert plan.count("MapInPandas") == 1, plan
+    assert not re.search(r"Join[^\n]*chunk_key", plan), plan
+
+
 @pytest.mark.parametrize("n_docs", [100, 20_000])
 def test_minhash_candidate_pairs_plan_runs_signatures_once(spark, n_docs):
     """The Arrow signature pass must have ONE consumer at every scale
