@@ -2,7 +2,10 @@
 
 The pipeline targets multi-executor clusters reading 10^12-document
 Iceberg tables; in this sandbox it runs ``local[$SPARK_GRAFT_CPUS]``.
-All scale knobs live here so bench/tests/production share one place:
+``get_spark`` holds the session settings that bench.py, perfbench, the
+tests and ``tools/rehearse.py`` share.  The spark-submit jobs
+(``jobs/run_pipeline.py``, ``jobs/run_extract.py``) build their own
+sessions and take their settings from spark-submit.  The settings:
 
 - AQE on (runtime coalescing + skew handling for the doc_id shuffle).
 - Arrow batches sized so one python-worker batch is thousands of small
@@ -11,6 +14,8 @@ All scale knobs live here so bench/tests/production share one place:
   splits batches per partition anyway.
 - shuffle partitions default to 4x cores so AQE has room to coalesce
   and skewed per-doc groups spread out.
+- the generated-class cache holds a warm session's working set, so
+  re-running a plan shape compiles nothing.
 """
 
 from __future__ import annotations
@@ -55,6 +60,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
+        # Generated-class cache (JVM-wide, sized when the JVM first
+        # generates code; Spark default 100).  A warm perfbench
+        # corpus_build pass uses 133 distinct classes and the bench.py
+        # suite about 558, so at 100 the LRU evicts each class before
+        # its reuse: every pass re-ran Janino on all of them and
+        # HotSpot JIT-compiled the fresh copies again.  At 1000 a warm
+        # pass compiles nothing (tests/test_plans.py pins it).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local mode = one JVM for driver AND executors; the Spark
         # default heap (1g) OOMs the first real shuffle at rehearsal
         # scale (r6: the 200k-vector verify join died in a 1g heap).

@@ -352,3 +352,61 @@ def test_source_mixture_rates_join_broadcasts(spark):
     plan = _plan(source_mixture_sample(spark, SF))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_warm_pipeline_pass_compiles_nothing(spark, tmp_path_factory):
+    """A warm session re-running the pipeline's stage composition
+    (perfbench corpus_build: run_partitioned, content_features and the
+    keep count, near_dup_keep, the bucketed training write) must find
+    every generated class in the codegen cache: the second pass runs
+    Janino zero times.  At Spark's default cache of 100 entries the
+    LRU evicted each of the pass's ~130 classes before its reuse and
+    every pass recompiled all of them."""
+    import shutil
+
+    from boilerpipe_coffee_spark.operators.pipeline import run_partitioned
+    from boilerpipe_coffee_spark.operators.pretrain import (
+        content_features,
+        near_dup_keep,
+    )
+    from boilerpipe_coffee_spark.sources import write_bucketed
+
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    base = tmp_path_factory.mktemp("warm_pass")
+    synth_interleaved(spark, 120, seed=42).write.parquet(str(base / "docs"))
+    tables = []
+
+    def one_pass(i):
+        out = base / f"pass-{i}"
+        run_partitioned(
+            spark, spark.read.parquet(str(base / "docs")),
+            str(out / "extract"), n_buckets=4,
+        )
+        extracted = spark.read.parquet(str(out / "extract" / "data"))
+        features = content_features(extracted).persist()
+        try:
+            exact_kept = features.filter(F.col("keep")).count()
+            training = near_dup_keep(features, n_docs=exact_kept).filter(
+                F.col("keep_final")
+            ).drop("is_canonical", "passes_gates", "keep", "keep_final")
+            tables.append(f"warm_pass_training_{i}")
+            write_bucketed(
+                training, tables[-1], str(out / "training"), "doc_id",
+                n_buckets=8,
+            )
+        finally:
+            features.unpersist()
+
+    try:
+        one_pass(0)
+        warm = compiles.getCount()
+        assert warm > 0  # the counter is live: this JVM has compiled
+        one_pass(1)
+        assert compiles.getCount() - warm == 0
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(base, ignore_errors=True)
