@@ -62,10 +62,10 @@ def get_spark(
         .config("spark.driver.maxResultSize", "4g")
         # Generated-class cache (JVM-wide, sized when the JVM first
         # generates code; Spark default 100).  A warm perfbench
-        # corpus_build pass uses 133 distinct classes and the bench.py
-        # suite about 558, so at 100 the LRU evicts each class before
-        # its reuse: every pass re-ran Janino on all of them and
-        # HotSpot JIT-compiled the fresh copies again.  At 1000 a warm
+        # corpus_build pass uses 133 distinct classes and a bench.py
+        # sf0.1 session 558, so at 100 the LRU evicts each class before
+        # its reuse: every pass re-runs Janino on all of them and
+        # HotSpot JIT-compiles the fresh copies again.  At 1000 a warm
         # pass compiles nothing (tests/test_plans.py pins it).
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local mode = one JVM for driver AND executors; the Spark
